@@ -787,10 +787,9 @@ object SourceOps {
     * miniature) publishes behind a path-only manifest, so FILE pruning
     * cannot help and a pushed range probe's cost rests entirely on the
     * reader skipping row groups off the footer statistics. The content
-    * is the exact value gate; the `ok` boolean reproduces THE skip
-    * decision ([[graft.streaming.SnapshotColumnarReader.groupAdmits]],
-    * the same function the reader's advance loop calls) over the real
-    * footer driver-side and requires a strict-subset admission —
+    * is the exact value gate; the `ok` boolean reproduces the skip
+    * decision ([[graft.streaming.SnapshotSource.groupAdmits]]) over the
+    * real footer driver-side and requires a strict-subset admission —
     * group boundaries are compression-dependent, so the raw counts
     * bind as the boolean, not as oracle columns.
     */
@@ -815,7 +814,7 @@ object SourceOps {
         import scala.jdk.CollectionConverters._
         val blocks = r.getFooter.getBlocks.asScala
         (blocks.size.toLong, blocks.count(b =>
-          graft.streaming.SnapshotColumnarReader.groupAdmits(
+          graft.streaming.SnapshotSource.groupAdmits(
             Map("o_orderkey" -> ((lo, hi))), Map.empty, b)).toLong)
       } finally r.close()
     require(total >= 4,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -251,7 +252,9 @@ class SnapshotCatalog extends TableCatalog
         "an explicit LOCATION is not supported")
     // Fail the statement up front on a column type the snapshot
     // writers cannot encode, not the user's first task mid-job.
-    SnapshotSource.messageTypeOf(schema)
+    if (!new ParquetFileFormat().supportDataType(schema))
+      throw new UnsupportedOperationException(
+        s"snapshot tables store parquet, which cannot encode ${schema.simpleString}")
     new SnapshotStagedCreate(root, schema, partCol)
   }
 
@@ -326,8 +329,10 @@ class SnapshotCatalog extends TableCatalog
           "column DEFAULT values are not supported")
         // Refuse up front the types the snapshot writers cannot encode,
         // instead of failing the user's NEXT insert.
-        SnapshotSource.messageTypeOf(StructType(Seq(
-          org.apache.spark.sql.types.StructField(name, add.dataType(), true))))
+        if (!new ParquetFileFormat().supportDataType(add.dataType()))
+          throw new UnsupportedOperationException(
+            s"snapshot tables store parquet, which cannot encode column " +
+              s"$name of type ${add.dataType().simpleString}")
         schema.add(org.apache.spark.sql.types.StructField(
           name, add.dataType(), nullable = true))
       case (schema, ren: TableChange.RenameColumn) =>
@@ -456,10 +461,9 @@ private[streaming] class SnapshotStagedCreate(table: String,
         override def toBatch: BatchWrite = new BatchWrite {
           override def createBatchWriterFactory(
               pinfo: PhysicalWriteInfo): DataWriterFactory = partCol match {
-            case Some(c) => new PartitionedWriterFactory(stageDir,
-              info.schema(), SnapshotSource.sessionConf(), c)
-            case None => new SnapshotWriterFactory(stageDir, info.schema(),
-              SnapshotSource.sessionConf())
+            case Some(c) =>
+              new PartitionedWriterFactory(stageDir, info.schema(), c)
+            case None => new SnapshotWriterFactory(stageDir, info.schema())
           }
           // NOT the visibility point: the staged-table contract defers
           // that to commitStagedChanges; this only records what landed.
@@ -578,8 +582,7 @@ private[streaming] class SnapshotBranchTable(table: String, branch: String)
             s"$table/data/branch=$branch/a=${SnapshotTable.attemptName()}"
           override def createBatchWriterFactory(
               pinfo: PhysicalWriteInfo): DataWriterFactory =
-            new SnapshotWriterFactory(stageDir, info.schema(),
-              SnapshotSource.sessionConf())
+            new SnapshotWriterFactory(stageDir, info.schema())
           override def commit(messages: Array[WriterCommitMessage]): Unit = {
             val fresh = messages.collect {
               case SnapshotWriteMessage(p) => p
@@ -610,7 +613,7 @@ private[streaming] class SnapshotBranchTable(table: String, branch: String)
           override def planInputPartitions(): Array[InputPartition] =
             files().map(SnapshotFilePartition(_)).toArray
           override def createReaderFactory(): PartitionReaderFactory =
-            new SnapshotReaderFactory(required, SnapshotSource.sessionConf())
+            new SnapshotReaderFactory(required)
         }
       }
     }

@@ -4,10 +4,6 @@ import java.util
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -57,11 +53,11 @@ import graft.sources.SnapshotTable
   * window is the unexpired history — the standard
   * retention-vs-replay trade every lakehouse source documents.
   *
-  * The per-file readers decode parquet through the library's public
-  * example Group API (no Spark internals): primitive columns map by
-  * NAME from the file footer's schema to the scan schema, so a file
-  * written before a column was added simply yields nulls for it —
-  * the mergeSchema posture at the row level.
+  * The per-file readers and writers are Spark's own parquet reader and
+  * writer ([[SnapshotReaderFactory]], [[PreparedParquetWrite]]):
+  * columns map by NAME from the file footer's schema to the scan
+  * schema, so a file written before a column was added simply yields
+  * nulls for it — the mergeSchema posture at the row level.
   */
 class SnapshotSourceProvider extends TableProvider {
 
@@ -288,20 +284,6 @@ private[graft] object SnapshotSource {
           footer.fields.filterNot(f =>
             claimed.exists(_.equalsIgnoreCase(f.name))))
     }
-  }
-
-  /** Parquet INT96 timestamp (the type Spark's own writer emits by
-    * default) as epoch MICROS: 8 little-endian bytes of
-    * nanos-of-day + 4 little-endian bytes of Julian day. Modern
-    * timestamps only (no pre-Gregorian rebase — the 1582 calendar
-    * switch is out of every fixture's range and documented as such).
-    */
-  def int96ToMicros(b: Array[Byte]): Long = {
-    require(b.length == 12, s"INT96 timestamp must be 12 bytes; got ${b.length}")
-    val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
   }
 
   /** The session's Hadoop configuration, captured DRIVER-SIDE in a
@@ -632,6 +614,40 @@ private[graft] object SnapshotSource {
     }
   }
 
+  /** Whether a row group's footer column statistics can hold a row
+    * satisfying `bounds`/`probes` — the row-group skip decision, for
+    * driver-side audits of a file's footer (Spark's parquet reader
+    * makes the same decision task-side from the scan's pushed
+    * filters). A column absent from the file (pre-evolution), with no
+    * recorded stats, or of a non-integer physical type admits
+    * conservatively.
+    */
+  private[graft] def groupAdmits(bounds: Map[String, (Long, Long)],
+      probes: Map[String, Seq[Long]],
+      b: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean = {
+    if (bounds.isEmpty && probes.isEmpty) return true
+    import scala.jdk.CollectionConverters._
+    val cols = b.getColumns.asScala
+    def statsOf(c: String): Option[(Long, Long)] =
+      cols.find(_.getPath.toDotString == c).flatMap { cc =>
+        val s = cc.getStatistics
+        if (s == null || !s.hasNonNullValue) None
+        else (s.genericGetMin, s.genericGetMax) match {
+          case (mn: java.lang.Long, mx: java.lang.Long) =>
+            Some((mn.longValue, mx.longValue))
+          case (mn: java.lang.Integer, mx: java.lang.Integer) =>
+            Some((mn.longValue, mx.longValue))
+          case _ => None
+        }
+      }
+    bounds.forall { case (c, (lo, hi)) =>
+      statsOf(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    } && probes.forall { case (c, vs) =>
+      statsOf(c).forall { case (mn, mx) =>
+        vs.exists(v => v >= mn && v <= mx) }
+    }
+  }
+
   /** Full-content commits (INSERT OVERWRITE, CTAS) reduce their staged
     * files to `(files to publish, husks to delete)`: zero-row husks
     * drop from a non-empty result (they would bloat the manifest
@@ -651,8 +667,7 @@ private[graft] object SnapshotSource {
         (empty.take(1).map(_._1), empty.drop(1).map(_._1))
       else {
         val husk = s"$stageDir/empty-00000.parquet"
-        val w = new SnapshotFileWriter(husk, schema, sessionConf().value)
-        w.commit()
+        new PreparedParquetWrite(schema).open(husk).commit()
         (Seq(husk), Seq.empty[String])
       }
     drop.foreach { p =>
@@ -683,111 +698,6 @@ private[graft] object SnapshotSource {
     p.getFileSystem(
       SparkSession.active.sparkContext.hadoopConfiguration).delete(p, true)
     ()
-  }
-
-  /** Minimum two's-complement byte width holding any unscaled decimal
-    * of `precision` digits — the FIXED_LEN_BYTE_ARRAY length the
-    * parquet format spec mandates for wide decimals (precision 38 →
-    * 16 bytes, the INT128 width every engine uses).
-    */
-  def decimalBytes(precision: Int): Int =
-    math.ceil((precision * math.log(10) / math.log(2) + 1) / 8).toInt
-
-  /** The parquet schema for the write path — the readers' type set,
-    * with the standard logical annotations so a plain
-    * `spark.read.parquet` round-trips the types. DECIMAL follows the
-    * format spec's physical mapping (INT64 for precision ≤ 18,
-    * FIXED_LEN_BYTE_ARRAY above — the layout Spark's own writer emits
-    * with legacy format off), and ARRAY is the standard THREE-LEVEL
-    * list (`optional group (LIST) { repeated group list { optional
-    * element } }`) over a primitive element, so money and embedding
-    * columns commit through the connector/catalog like any other.
-    */
-  def messageTypeOf(schema: StructType): org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    def prim(dt: DataType, name: String, owner: String,
-        req: Boolean = false): org.apache.parquet.schema.Type = {
-      val rep =
-        if (req) org.apache.parquet.schema.Type.Repetition.REQUIRED
-        else org.apache.parquet.schema.Type.Repetition.OPTIONAL
-      dt match {
-        case LongType => Types.primitive(INT64, rep).named(name)
-        case TimestampType => Types.primitive(INT64, rep)
-          .as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS))
-          .named(name)
-        case TimestampNTZType => Types.primitive(INT64, rep)
-          .as(LogicalTypeAnnotation.timestampType(false, TimeUnit.MICROS))
-          .named(name)
-        case IntegerType => Types.primitive(INT32, rep).named(name)
-        case DateType => Types.primitive(INT32, rep)
-          .as(LogicalTypeAnnotation.dateType()).named(name)
-        case DoubleType => Types.primitive(DOUBLE, rep).named(name)
-        case FloatType => Types.primitive(FLOAT, rep).named(name)
-        case BooleanType => Types.primitive(BOOLEAN, rep).named(name)
-        case StringType => Types.primitive(BINARY, rep)
-          .as(LogicalTypeAnnotation.stringType()).named(name)
-        case BinaryType => Types.primitive(BINARY, rep).named(name)
-        case d: DecimalType if d.precision <= 18 => Types.primitive(INT64, rep)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-        case d: DecimalType => Types.primitive(FIXED_LEN_BYTE_ARRAY, rep)
-          .length(decimalBytes(d.precision))
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-        case other => throw new UnsupportedOperationException(
-          s"snapshot writer supports primitive/decimal/nested columns; " +
-            s"got $other for $owner")
-      }
-    }
-    def typ(dt: DataType, name: String,
-        owner: String): org.apache.parquet.schema.Type = dt match {
-      case ArrayType(et, _) => Types.optionalList()
-        .element(typ(et, "element", s"$owner (array element)"))
-        .named(name)
-      case st: StructType =>
-        // Typed metadata (the multimodal story): STRUCT as an optional
-        // nested group, members recursively — struct-of-struct,
-        // array-of-struct and struct-of-array all compose.
-        val gb = Types.optionalGroup()
-        st.fields.foreach(f =>
-          gb.addField(typ(f.dataType, f.name, s"$owner.${f.name}")))
-        gb.named(name)
-      case MapType(kt, vt, _) =>
-        // Standard MAP shape: repeated key_value group, REQUIRED
-        // primitive key (the format's contract), optional value of any
-        // supported shape.
-        Types.optionalMap()
-          .key(prim(kt, "key", s"$owner (map key)", req = true))
-          .value(typ(vt, "value", s"$owner (map value)"))
-          .named(name)
-      case other => prim(other, name, owner)
-    }
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(typ(f.dataType, f.name, f.name)))
-    b.named("spark_schema")
-  }
-
-  /** One decimal's unscaled value as the fixed-width two's-complement
-    * big-endian byte array FIXED_LEN_BYTE_ARRAY decimals store —
-    * sign-extended to exactly [[decimalBytes]] of the precision.
-    */
-  def decimalToFixedBytes(d: org.apache.spark.sql.types.Decimal,
-      precision: Int): Array[Byte] = {
-    val width = decimalBytes(precision)
-    val raw = d.toJavaBigDecimal.unscaledValue.toByteArray
-    require(raw.length <= width,
-      s"unscaled decimal ${d} needs ${raw.length} bytes; precision " +
-        s"$precision allows $width")
-    if (raw.length == width) raw
-    else {
-      val out = new Array[Byte](width)
-      val pad: Byte = if (raw(0) < 0) -1 else 0
-      java.util.Arrays.fill(out, 0, width - raw.length, pad)
-      System.arraycopy(raw, 0, out, width - raw.length, raw.length)
-      out
-    }
   }
 }
 
@@ -992,8 +902,8 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
 
   /** The WRITE path: `df.write.format(...).mode("append").save()` /
     * SQL `INSERT INTO` stages one parquet file per task under a
-    * writer-unique attempt directory (encoded through the same public
-    * Group API the readers decode with), and the driver-side commit
+    * writer-unique attempt directory (through Spark's own parquet
+    * writer, [[PreparedParquetWrite]]), and the driver-side commit
     * publishes them as the NEXT generation carrying the previous one's
     * files verbatim — the same append-without-rewrite,
     * first-writer-wins, manifest-as-commit-point protocol every other
@@ -1094,12 +1004,9 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
       "startingGeneration and startingTimestamp are mutually exclusive")
     require(startingGeneration.forall(_ >= 1L),
       "startingGeneration must be >= 1")
-    // Column pruning reaches the row decoder: readers resolve and
-    // convert ONLY the pruned schema's fields, so a 2-column
-    // projection over a wide table skips the other columns' value
-    // materialization entirely (the Group assembly still parses the
-    // row group; production columnar decode would skip the pages too —
-    // the pruning CONTRACT is what this connector pins). Filter
+    // Column pruning reaches the reader: Spark's parquet reader reads
+    // ONLY the pruned schema's column chunks, so a 2-column projection
+    // over a wide table never fetches the other columns' pages. Filter
     // pushdown prunes FILES through the manifest's zone maps
     // (stats manifests only): pushed comparisons fold into per-column
     // [lo, hi] bounds and batch planning admits only files whose
@@ -1346,10 +1253,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
         override def filter(
             predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
             : Unit =
-          batch.applyRuntimeFilters(
-            SnapshotSource.v2BoundsOf(predicates, tableSchema),
-            SnapshotSource.v2ProbesOf(predicates),
-            SnapshotSource.v2StrProbesOf(predicates))
+          batch.applyRuntimeFilters(predicates, tableSchema)
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new SnapshotMicroBatchStream(table, required, skipRewrites,
             maxGensPerBatch, maxFilesPerBatch, maxBytesPerBatch,
@@ -1360,7 +1264,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
           SnapshotSource.probesOf(pushed),
           SnapshotSource.strProbesOf(pushed),
           SnapshotSource.aliasMapOf(tableSchema),
-          limitFiles, topNSpec)
+          limitFiles, topNSpec, pushed)
         override def toBatch: Batch = batch
         // POST-PRUNING size estimate, served from the MANIFEST's
         // recorded per-file stats (one manifest read covers every
@@ -1418,8 +1322,8 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
 /** Batch scan AS OF a generation (latest by default): the planned
   * partitions are exactly the manifest's files — the same snapshot
   * isolation [[SnapshotTable.readAs]] provides, but through the
-  * connector's own readers, which puts the custom parquet decode path
-  * inside the value-oracle gate (`src_connector_read`).
+  * connector's own reader factory, which puts its pruning and alias
+  * resolution inside the value-oracle gate (`src_connector_read`).
   */
 private[streaming] class SnapshotBatch(table: String, schema: StructType,
     generation: Option[Long],
@@ -1428,7 +1332,8 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     strProbes: Map[String, Seq[String]] = Map.empty,
     aliases: Map[String, Seq[String]] = Map.empty,
     limit: Option[Int] = None,
-    topN: Option[(String, Boolean, Int)] = None) extends Batch {
+    topN: Option[(String, Boolean, Int)] = None,
+    filters: Array[Filter] = Array.empty) extends Batch {
 
   // RUNTIME filters (SupportsRuntimeV2Filtering): bounds/probes derived
   // from a join's build side AFTER it executes, intersected with the
@@ -1438,13 +1343,15 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
   @volatile private var rtBounds: Map[String, (Long, Long)] = Map.empty
   @volatile private var rtProbes: Map[String, Seq[Long]] = Map.empty
   @volatile private var rtStrProbes: Map[String, Seq[String]] = Map.empty
+  @volatile private var rtFilters: Array[Filter] = Array.empty
 
-  private[streaming] def applyRuntimeFilters(b: Map[String, (Long, Long)],
-      p: Map[String, Seq[Long]],
-      s: Map[String, Seq[String]] = Map.empty): Unit = {
-    rtBounds = b
-    rtProbes = p
-    rtStrProbes = s
+  private[streaming] def applyRuntimeFilters(
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate],
+      tableSchema: StructType): Unit = {
+    rtBounds = SnapshotSource.v2BoundsOf(predicates, tableSchema)
+    rtProbes = SnapshotSource.v2ProbesOf(predicates)
+    rtStrProbes = SnapshotSource.v2StrProbesOf(predicates)
+    rtFilters = org.apache.spark.sql.GraftBridge.toV1(predicates)
   }
 
   private def mergedBounds: Map[String, (Long, Long)] =
@@ -1672,12 +1579,11 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       resolvePlan()._2.map(SnapshotFilePartition(_)).toArray
   }
 
-  // The factory carries the MERGED (compile-time + runtime) bounds and
-  // probes so the task-side readers can extend the same pruning one
-  // level deeper: row groups inside admitted files.
+  // The factory carries the compile-time and runtime filters so Spark's
+  // parquet reader extends the same pruning one level deeper: row
+  // groups inside admitted files.
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(schema, SnapshotSource.sessionConf(),
-      mergedBounds, mergedProbes, aliases)
+    new SnapshotReaderFactory(schema, filters ++ rtFilters, aliases)
 }
 
 /** Offset state. `pos == 0`: the consumer holds the full content of
@@ -2117,8 +2023,7 @@ private[streaming] class SnapshotMicroBatchStream(table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(schema, SnapshotSource.sessionConf(),
-      aliases = aliases)
+    new SnapshotReaderFactory(schema, aliases = aliases)
 
   override def commit(end: Offset): Unit = ()
 
@@ -2165,44 +2070,139 @@ private[streaming] class SnapshotConcatReader[T](paths: Seq[String],
   override def close(): Unit = if (cur != null) cur.close()
 }
 
+/** Spark's own parquet reader over the connector's planned files:
+  * vectorized for every shape Spark vectorizes (nested included), and
+  * its row-group statistics filter, driven by `filters`, is the third
+  * pruning level under the manifest zone maps and bloom sidecars. Spark
+  * picks a file's row groups by split range, so each file is read as
+  * one split of its full length. A pre-rename file is read with its
+  * footer's names in place of the renamed columns (the alias chain,
+  * newest first); the output is positional, so no relabelling follows.
+  */
 private[streaming] class SnapshotReaderFactory(schema: StructType,
-    conf: SerializableConfiguration,
-    bounds: Map[String, (Long, Long)] = Map.empty,
-    probes: Map[String, Seq[Long]] = Map.empty,
+    filters: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case SnapshotFilePartition(path) =>
-        new SnapshotFileReader(path, schema, conf.value, aliases)
-      case SnapshotKeyedPartition(paths, _, _) =>
-        new SnapshotConcatReader(paths,
-          p => new SnapshotFileReader(p, schema, conf.value, aliases))
-    }
+  import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+  import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+  import org.apache.spark.sql.internal.SQLConf
 
-  // VECTORIZED decode ([[SnapshotColumnarReader]]): projected row-group
-  // reads skip unrequested columns' PAGES, values land in columnar
-  // batches, and the scan's pushed bounds/probes skip whole ROW GROUPS
-  // off the footer statistics before any page I/O. The row decoder
-  // stays as the fallback for types outside the flat fast path (array
-  // columns); `-Dgraft.snapshot.rowDecode=true` forces it for A/B
-  // debugging.
+  private val conf = SnapshotSource.sessionConf()
+
+  private val parquet = {
+    val sqlConf = SQLConf.get
+    SnapshotReaderFactory.prepareRead(conf.value, sqlConf, schema)
+    readerOf(sqlConf, conf, schema)
+  }
+
+  private def readerOf(sqlConf: SQLConf, c: SerializableConfiguration,
+      read: StructType): ParquetPartitionReaderFactory =
+    ParquetPartitionReaderFactory(sqlConf, new ShippedConf(c), read, read,
+      new StructType(), filters, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(
+        Map.empty[String, String], sqlConf))
+
+  private val renamed = schema.fieldNames.exists(aliases.contains)
+
+  private def open[T](path: String,
+      read: (ParquetPartitionReaderFactory, FilePartition) => PartitionReader[T])
+      : PartitionReader[T] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(conf.value).getFileStatus(p)
+    val file = PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L, st.getLen,
+      fileSize = st.getLen)
+    val factory =
+      if (!renamed) parquet
+      else {
+        val named = footerNamed(st)
+        val c = new org.apache.hadoop.conf.Configuration(conf.value)
+        SnapshotReaderFactory.requestSchema(c, named)
+        // Built task-side, where a shipped SQLConf no longer reads (its
+        // settings are transient): SQLConf.get is the task's view.
+        readerOf(SQLConf.get, new SerializableConfiguration(c), named)
+      }
+    read(factory, FilePartition(0, Array(file)))
+  }
+
+  private def footerNamed(st: org.apache.hadoop.fs.FileStatus): StructType = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf.value))
+    val footer =
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    StructType(schema.fields.map { f =>
+      if (footer.containsField(f.name)) f
+      else aliases.getOrElse(f.name, Seq.empty).find(footer.containsField)
+        .fold(f)(old => f.copy(name = old))
+    })
+  }
+
+  private def paths(partition: InputPartition): Seq[String] = partition match {
+    case SnapshotFilePartition(path) => Seq(path)
+    case SnapshotKeyedPartition(paths, _, _) => paths
+  }
+
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    !java.lang.Boolean.getBoolean("graft.snapshot.rowDecode") &&
-      SnapshotColumnarReader.supports(schema)
+    parquet.supportColumnarReads(partition)
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new SnapshotConcatReader(paths(partition),
+      p => open(p, (f, fp) => f.createReader(fp)))
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[ColumnarBatch] =
-    partition match {
-      case SnapshotFilePartition(path) =>
-        new SnapshotColumnarReader(path, schema, conf.value,
-          bounds = bounds, probes = probes, aliases = aliases)
-      case SnapshotKeyedPartition(paths, _, _) =>
-        new SnapshotConcatReader(paths,
-          p => new SnapshotColumnarReader(p, schema, conf.value,
-            bounds = bounds, probes = probes, aliases = aliases))
-    }
+    new SnapshotConcatReader(paths(partition),
+      p => open(p, (f, fp) => f.createColumnarReader(fp)))
+}
+
+private[streaming] object SnapshotReaderFactory {
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** The keys Spark's own parquet scan sets on the Hadoop conf before
+    * its reader factory runs (`ParquetScan.createReaderFactory`): the
+    * read support, the requested schema (parquet columns resolve by
+    * these names), and the schema-conversion flags the reader requires.
+    */
+  def prepareRead(c: org.apache.hadoop.conf.Configuration, sqlConf: SQLConf,
+      read: StructType): Unit = {
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    requestSchema(c, read)
+    c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    c.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sqlConf.isParquetBinaryAsString)
+    c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    c.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    c.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+  }
+
+  def requestSchema(c: org.apache.hadoop.conf.Configuration,
+      read: StructType): Unit = {
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, read.json)
+    c.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, read.json)
+  }
+}
+
+/** The session Hadoop conf in the `Broadcast` shape Spark's parquet
+  * reader factory takes, shipped inside the serialized factory like
+  * every other connector factory's conf: a real broadcast per scan
+  * would add a driver block-manager entry per query.
+  */
+private[streaming] class ShippedConf(conf: SerializableConfiguration)
+    extends org.apache.spark.broadcast.Broadcast[SerializableConfiguration](-1L) {
+  override protected def getValue(): SerializableConfiguration = conf
+  override protected def doUnpersist(blocking: Boolean): Unit = ()
+  override protected def doDestroy(blocking: Boolean): Unit = ()
 }
 
 private[streaming] case class SnapshotWriteMessage(path: String)
@@ -2225,10 +2225,8 @@ private[streaming] class SnapshotBatchWrite(table: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     partCol match {
-      case Some(c) => new PartitionedWriterFactory(stageDir, schema,
-        SnapshotSource.sessionConf(), c)
-      case None =>
-        new SnapshotWriterFactory(stageDir, schema, SnapshotSource.sessionConf())
+      case Some(c) => new PartitionedWriterFactory(stageDir, schema, c)
+      case None => new SnapshotWriterFactory(stageDir, schema)
     }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -2280,10 +2278,8 @@ private[streaming] class SnapshotOverwriteWrite(table: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     partCol match {
-      case Some(c) => new PartitionedWriterFactory(stageDir, schema,
-        SnapshotSource.sessionConf(), c)
-      case None =>
-        new SnapshotWriterFactory(stageDir, schema, SnapshotSource.sessionConf())
+      case Some(c) => new PartitionedWriterFactory(stageDir, schema, c)
+      case None => new SnapshotWriterFactory(stageDir, schema)
     }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -2429,7 +2425,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
             // files carry verbatim at commit; sub-file pruning has no
             // such carry.
             override def createReaderFactory(): PartitionReaderFactory =
-              new SnapshotReaderFactory(required, SnapshotSource.sessionConf(),
+              new SnapshotReaderFactory(required,
                 aliases = SnapshotSource.aliasMapOf(tableSchema))
           }
         override def readSchema(): StructType = required
@@ -2442,10 +2438,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
         override def filter(
             predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
             : Unit =
-          batch.applyRuntimeFilters(
-            SnapshotSource.v2BoundsOf(predicates, tableSchema),
-            SnapshotSource.v2ProbesOf(predicates),
-            SnapshotSource.v2StrProbesOf(predicates))
+          batch.applyRuntimeFilters(predicates, tableSchema)
         override def toBatch: Batch = batch
       }
     }
@@ -2485,7 +2478,7 @@ private[streaming] class SnapshotReplaceWrite(table: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new ReplaceRowWriterFactory(
-      new SnapshotWriterFactory(stageDir, schema, SnapshotSource.sessionConf()),
+      new SnapshotWriterFactory(stageDir, schema),
       schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -2568,7 +2561,7 @@ private[streaming] case class SnapshotPartsWriteMessage(
   * partitioned catalog tables: each row lands in the file of its
   * partition VALUE (`.../p=<v>/part-<pid>-<tid>.parquet` under the
   * attempt-private staging dir — directory-granular layout at rest),
-  * one [[SnapshotFileWriter]] per distinct value per task. Integer-
+  * one staged file per distinct value per task. Integer-
   * physical columns only (INT/BIGINT/DATE — the catalog refuses
   * anything else at CREATE), so the value IS the zone-map domain.
   * Callers that want bounded files per partition repartition by the
@@ -2576,8 +2569,10 @@ private[streaming] case class SnapshotPartsWriteMessage(
   * dynamic-partition writer.
   */
 private[streaming] class PartitionedWriterFactory(stageDir: String,
-    schema: StructType, conf: SerializableConfiguration, partCol: String)
+    schema: StructType, partCol: String)
     extends DataWriterFactory with StreamingDataWriterFactory {
+
+  private val parquet = new PreparedParquetWrite(schema)
 
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] = writer(stageDir, partitionId, taskId)
@@ -2593,7 +2588,7 @@ private[streaming] class PartitionedWriterFactory(stageDir: String,
     private val idx = schema.fieldIndex(partCol)
     private val dt = schema.fields(idx).dataType
     private val writers =
-      scala.collection.mutable.LinkedHashMap.empty[Option[Long], SnapshotFileWriter]
+      scala.collection.mutable.LinkedHashMap.empty[Option[Long], DataWriter[InternalRow]]
 
     private def valueOf(row: InternalRow): Option[Long] =
       if (row.isNullAt(idx)) None
@@ -2606,9 +2601,9 @@ private[streaming] class PartitionedWriterFactory(stageDir: String,
 
     override def write(row: InternalRow): Unit = {
       val v = valueOf(row)
-      writers.getOrElseUpdate(v, new SnapshotFileWriter(
+      writers.getOrElseUpdate(v, parquet.open(
         s"$dir/p=${v.map(_.toString).getOrElse("null")}/" +
-          s"part-$partitionId-$taskId.parquet", schema, conf.value))
+          s"part-$partitionId-$taskId.parquet"))
         .write(row)
     }
 
@@ -2624,17 +2619,16 @@ private[streaming] class PartitionedWriterFactory(stageDir: String,
 }
 
 private[streaming] class SnapshotWriterFactory(stageDir: String,
-    schema: StructType, conf: SerializableConfiguration)
+    schema: StructType)
     extends DataWriterFactory with StreamingDataWriterFactory {
+  private val parquet = new PreparedParquetWrite(schema)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SnapshotFileWriter(
-      s"$stageDir/part-$partitionId-$taskId.parquet", schema, conf.value)
+    parquet.open(s"$stageDir/part-$partitionId-$taskId.parquet")
   // Streaming epochs stage under epoch-scoped directories so a
   // replayed epoch never collides with its failed attempt's files.
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new SnapshotFileWriter(
-      s"$stageDir/e=$epochId/part-$partitionId-$taskId.parquet", schema, conf.value)
+    parquet.open(s"$stageDir/e=$epochId/part-$partitionId-$taskId.parquet")
 }
 
 /** The NATIVE streaming sink — [[SnapshotStream.snapshotIngest]]'s
@@ -2659,10 +2653,8 @@ private[streaming] class SnapshotStreamingWrite(table: String,
     // each epoch's files land per partition value and commit with
     // min=max=value zone rows, so a tailed-and-ingested table prunes
     // exactly like its batch-written twin.
-    case Some(c) => new PartitionedWriterFactory(stageDir, schema,
-      SnapshotSource.sessionConf(), c)
-    case None =>
-      new SnapshotWriterFactory(stageDir, schema, SnapshotSource.sessionConf())
+    case Some(c) => new PartitionedWriterFactory(stageDir, schema, c)
+    case None => new SnapshotWriterFactory(stageDir, schema)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -2694,323 +2686,53 @@ private[streaming] class SnapshotStreamingWrite(table: String,
   }
 }
 
-/** Row-by-row parquet ENCODE of one staged file through the public
-  * Group API — the mirror of [[SnapshotFileReader]]'s decode, same
-  * primitive-type dispatch.
+/** Spark's own parquet writer for one schema, prepared DRIVER-side:
+  * `ParquetFileFormat.prepareWrite` fills the job conf the task-side
+  * writers read (write support, row schema, codec), and both ride to
+  * the tasks inside the writer factories. Timestamps stay INT64 micros
+  * rather than Spark's INT96 default: INT96 carries no footer
+  * statistics, so time columns would lose their zone maps.
   */
-private[streaming] class SnapshotFileWriter(path: String, schema: StructType,
-    hadoopConf: Configuration) extends DataWriter[InternalRow] {
+private[streaming] class PreparedParquetWrite(schema: StructType)
+    extends Serializable {
 
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+  @transient private val job = org.apache.hadoop.mapreduce.Job.getInstance(
+    SparkSession.active.sessionState.newHadoopConf())
 
-  private val msgType = SnapshotSource.messageTypeOf(schema)
-  private val writer = {
-    // Clone before mutating: setSchema writes into the conf, and the
-    // session conf is shared across this task's writers.
-    val conf = new Configuration(hadoopConf)
-    GroupWriteSupport.setSchema(msgType, conf)
-    ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
-      .withConf(conf).build()
+  private val output =
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(SparkSession.active, job, Map.empty, schema)
+
+  private val conf = {
+    job.getConfiguration.set(
+      org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      "TIMESTAMP_MICROS")
+    new SerializableConfiguration(job.getConfiguration)
   }
-  private val factory = new SimpleGroupFactory(msgType)
 
-  /** One NON-NULL value encoded into `g` under `name` — recursive over
-    * arrays (three-level list: one `list` repetition per element, the
-    * optional `element` absent for a null element) and structs (nested
-    * group, null members absent). `v` abstracts InternalRow/ArrayData
-    * through the shared getter interface.
+  /** A writer of one staged file. The file exists from here on, so a
+    * writer committed with zero rows still leaves a schema-carrying
+    * file.
     */
-  private def add(g: Group, name: String, dt: org.apache.spark.sql.types.DataType,
-      v: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): Unit = dt match {
-    case LongType | TimestampType | TimestampNTZType => g.add(name, v.getLong(i))
-    case IntegerType | DateType => g.add(name, v.getInt(i))
-    case DoubleType => g.add(name, v.getDouble(i))
-    case FloatType => g.add(name, v.getFloat(i))
-    case BooleanType => g.add(name, v.getBoolean(i))
-    case StringType => g.add(name, v.getUTF8String(i).toString)
-    case BinaryType => g.add(name,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(v.getBinary(i)))
-    case d: DecimalType if d.precision <= 18 =>
-      g.add(name, v.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-    case d: DecimalType => g.add(name,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(
-        SnapshotSource.decimalToFixedBytes(
-          v.getDecimal(i, d.precision, d.scale), d.precision)))
-    case ArrayType(et, _) =>
-      val arr = v.getArray(i)
-      val lg = g.addGroup(name)
-      var j = 0
-      while (j < arr.numElements()) {
-        val eg = lg.addGroup("list")
-        if (!arr.isNullAt(j)) add(eg, "element", et, arr, j)
-        j += 1
-      }
-    case st: StructType =>
-      val sr = v.getStruct(i, st.length)
-      val sg = g.addGroup(name)
-      var j = 0
-      while (j < st.length) {
-        if (!sr.isNullAt(j)) add(sg, st.fields(j).name, st.fields(j).dataType, sr, j)
-        j += 1
-      }
-    case MapType(kt, vt, _) =>
-      // Standard MAP encode: one key_value repetition per entry, key
-      // required, null values absent.
-      val m = v.getMap(i)
-      val keys = m.keyArray()
-      val vals = m.valueArray()
-      val mg = g.addGroup(name)
-      var j = 0
-      while (j < m.numElements()) {
-        val kv = mg.addGroup("key_value")
-        add(kv, "key", kt, keys, j)
-        if (!vals.isNullAt(j)) add(kv, "value", vt, vals, j)
-        j += 1
-      }
-    case other => throw new UnsupportedOperationException(
-      s"snapshot writer: unsupported type $other for $name")
-  }
+  def open(path: String): DataWriter[InternalRow] = new DataWriter[InternalRow] {
+    private val out = output.newInstance(path, schema,
+      new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf.value,
+        new org.apache.hadoop.mapreduce.TaskAttemptID()))
 
-  override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.fields.length) {
-      val f = schema.fields(i)
-      if (!row.isNullAt(i)) add(g, f.name, f.dataType, row, i)
-      i += 1
+    override def write(row: InternalRow): Unit = out.write(row)
+
+    override def commit(): WriterCommitMessage = {
+      out.close()
+      SnapshotWriteMessage(path)
     }
-    writer.write(g)
-  }
 
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    SnapshotWriteMessage(path)
-  }
-
-  override def abort(): Unit = {
-    writer.close()
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(hadoopConf).delete(p, false)
-    ()
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Row-by-row parquet decode of one data file through the public
-  * Group API; field resolution is by name against the file footer, so
-  * schema evolution degrades to nulls instead of misaligned columns.
-  */
-private[streaming] class SnapshotFileReader(path: String, schema: StructType,
-    conf: Configuration,
-    aliases: Map[String, Seq[String]] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  private val reader: ParquetReader[Group] = ParquetReader
-    .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(path))
-    .withConf(conf)
-    .build()
-
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  // Per-FILE field resolution, computed once off the first row's group
-  // type (constant for the whole file): scan-field -> file index (-1
-  // when absent) plus the file's PHYSICAL storage choices (INT96
-  // timestamps from Spark's own writer; INT64-vs-FIXED decimals per
-  // the precision split) — the per-row name lookups and footer-type
-  // checks would otherwise run once per field per row. For ARRAY
-  // fields the flags describe the list's ELEMENT type.
-  private var fieldIdx: Array[Int] = _
-  private var fieldInt96: Array[Boolean] = _
-  private var fieldLeaf:
-    Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] = _
-
-  private def resolveFields(
-      fileType: org.apache.parquet.schema.GroupType): Unit = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    // Resolution order per scan field: its own name, then the RENAME
-    // alias chain (newest first) — a pre-rename file serves the
-    // renamed column's data under the old footer name.
-    fieldIdx = schema.fields.map { f =>
-      if (fileType.containsField(f.name)) fileType.getFieldIndex(f.name)
-      else aliases.getOrElse(f.name, Seq.empty).iterator
-        .filter(fileType.containsField)
-        .map(fileType.getFieldIndex).nextOption().getOrElse(-1)
+    override def abort(): Unit = {
+      out.close()
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(conf.value).delete(p, false)
+      ()
     }
-    // The type whose physical encoding matters: the field itself, or
-    // the 3-level list's element for an array field.
-    def leafOf(i: Int): Option[org.apache.parquet.schema.PrimitiveType] = {
-      if (i < 0) return None
-      val t = fileType.getType(i)
-      if (t.isPrimitive) Some(t.asPrimitiveType())
-      else {
-        val g = t.asGroupType()
-        if (g.getFieldCount != 1) None
-        else {
-          val rep = g.getType(0)
-          if (rep.isPrimitive) Some(rep.asPrimitiveType()) // 2-level legacy
-          else {
-            val inner = rep.asGroupType()
-            if (inner.getFieldCount == 1 && inner.getType(0).isPrimitive)
-              Some(inner.getType(0).asPrimitiveType())
-            else None
-          }
-        }
-      }
-    }
-    fieldInt96 = fieldIdx.map(i => leafOf(i).exists(
-      _.getPrimitiveTypeName == PrimitiveTypeName.INT96))
-    fieldLeaf = fieldIdx.map(i =>
-      leafOf(i).map(_.getPrimitiveTypeName).orNull)
-  }
 
-  /** One decimal value off a Group field, by the file's PHYSICAL
-    * encoding (resolved once per file): INT32/INT64 carry the unscaled
-    * value directly; FIXED_LEN_BYTE_ARRAY / BINARY carry its
-    * big-endian two's-complement bytes.
-    */
-  private def decimalOf(g: Group, idx: Int, rep: Int,
-      leaf: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName,
-      d: DecimalType): org.apache.spark.sql.types.Decimal = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    leaf match {
-      case PrimitiveTypeName.INT32 =>
-        org.apache.spark.sql.types.Decimal(
-          g.getInteger(idx, rep).toLong, d.precision, d.scale)
-      case PrimitiveTypeName.INT64 =>
-        org.apache.spark.sql.types.Decimal(
-          g.getLong(idx, rep), d.precision, d.scale)
-      case _ =>
-        org.apache.spark.sql.types.Decimal(new java.math.BigDecimal(
-          new java.math.BigInteger(g.getBinary(idx, rep).getBytes), d.scale),
-          d.precision, d.scale)
-    }
+    override def close(): Unit = ()
   }
-
-  override def get(): InternalRow = {
-    val g = current
-    if (fieldIdx == null) resolveFields(g.getType)
-    val values = new Array[Any](schema.fields.length)
-    var i = 0
-    while (i < schema.fields.length) {
-      val idx = fieldIdx(i)
-      values(i) =
-        if (idx < 0 || g.getFieldRepetitionCount(idx) == 0) null
-        else schema.fields(i).dataType match {
-          // Spark's own writer stores timestamps as INT96 by default;
-          // the file footer decides which decode applies.
-          case TimestampType | TimestampNTZType if fieldInt96(i) =>
-            SnapshotSource.int96ToMicros(g.getInt96(idx, 0).getBytes)
-          case LongType | TimestampType | TimestampNTZType => g.getLong(idx, 0)
-          case IntegerType | DateType => g.getInteger(idx, 0)
-          case DoubleType => g.getDouble(idx, 0)
-          case FloatType => g.getFloat(idx, 0)
-          case BooleanType => g.getBoolean(idx, 0)
-          case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-          case BinaryType => g.getBinary(idx, 0).getBytes
-          case d: DecimalType => decimalOf(g, idx, 0, fieldLeaf(i), d)
-          // Nested shapes recurse with inline footer-type resolution
-          // (the hoisted per-file arrays cover the hot flat columns;
-          // nested members were always per-element dispatch).
-          case dt @ (_: ArrayType | _: StructType | _: MapType) =>
-            value(g, idx, 0, dt)
-          case dt => throw new UnsupportedOperationException(
-            "snapshot source: unsupported column type " +
-              s"$dt for ${schema.fields(i).name}")
-        }
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  /** One NON-NULL value off field `idx`, repetition `rep` of `g` —
-    * the recursive decode for nested shapes (arrays as three-level
-    * lists, structs as nested groups with BY-NAME member resolution so
-    * evolution inside a struct degrades to null members). Physical
-    * forms (INT96 timestamps, INT32/INT64/FIXED decimals) resolve off
-    * the group's own footer type per value.
-    */
-  private def value(g: Group, idx: Int, rep: Int,
-      dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    def leaf: PrimitiveTypeName = {
-      val t = g.getType.getType(idx)
-      if (t.isPrimitive) t.asPrimitiveType().getPrimitiveTypeName else null
-    }
-    dt match {
-      case TimestampType | TimestampNTZType if leaf == PrimitiveTypeName.INT96 =>
-        SnapshotSource.int96ToMicros(g.getInt96(idx, rep).getBytes)
-      case LongType | TimestampType | TimestampNTZType => g.getLong(idx, rep)
-      case IntegerType | DateType => g.getInteger(idx, rep)
-      case DoubleType => g.getDouble(idx, rep)
-      case FloatType => g.getFloat(idx, rep)
-      case BooleanType => g.getBoolean(idx, rep)
-      case StringType => UTF8String.fromBytes(g.getBinary(idx, rep).getBytes)
-      case BinaryType => g.getBinary(idx, rep).getBytes
-      case d: DecimalType => decimalOf(g, idx, rep, leaf, d)
-      case ArrayType(et, _) =>
-        // THREE-LEVEL list decode (both writers' shape): the LIST
-        // group's single repeated `list` child, one repetition per
-        // element; the optional `element` absent = null element.
-        val lg = g.getGroup(idx, rep)
-        val n = lg.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val eg = lg.getGroup(0, k)
-          out(k) =
-            if (eg.getFieldRepetitionCount(0) == 0) null
-            else value(eg, 0, 0, et)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case st: StructType =>
-        val sg = g.getGroup(idx, rep)
-        val t = sg.getType
-        val out = new Array[Any](st.length)
-        var k = 0
-        while (k < st.length) {
-          val f = st.fields(k)
-          val j = if (t.containsField(f.name)) t.getFieldIndex(f.name) else -1
-          out(k) =
-            if (j < 0 || sg.getFieldRepetitionCount(j) == 0) null
-            else value(sg, j, 0, f.dataType)
-          k += 1
-        }
-        new GenericInternalRow(out)
-      case MapType(kt, vt, _) =>
-        // Standard MAP decode: the map group's single repeated
-        // key_value child, key/value resolved BY NAME.
-        val mg = g.getGroup(idx, rep)
-        val n = mg.getFieldRepetitionCount(0)
-        val keys = new Array[Any](n)
-        val vals = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val kv = mg.getGroup(0, k)
-          val t = kv.getType
-          val ki = t.getFieldIndex("key")
-          val vi = if (t.containsField("value")) t.getFieldIndex("value") else -1
-          keys(k) = value(kv, ki, 0, kt)
-          vals(k) =
-            if (vi < 0 || kv.getFieldRepetitionCount(vi) == 0) null
-            else value(kv, vi, 0, vt)
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-      case other => throw new UnsupportedOperationException(
-        s"snapshot source: unsupported nested type $other")
-    }
-  }
-
-  override def close(): Unit = reader.close()
 }

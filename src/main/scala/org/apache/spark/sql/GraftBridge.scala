@@ -32,4 +32,15 @@ object GraftBridge {
     */
   def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
     a.merge(b, internal.SQLConf.get.caseSensitiveAnalysis)
+
+  /** V2 predicates as the V1 filters Spark's file readers push into
+    * parquet (`PredicateUtils` is `private[sql]`). A predicate the
+    * converter cannot read drops — it expects the `And`/`Or`/`Not`
+    * classes, not a generic `Predicate` named "AND" — which only loses
+    * pruning.
+    */
+  def toV1(predicates: Array[connector.expressions.filter.Predicate])
+      : Array[sources.Filter] =
+    predicates.flatMap(p => scala.util.Try(
+      internal.connector.PredicateUtils.toV1(p)).toOption.flatten)
 }

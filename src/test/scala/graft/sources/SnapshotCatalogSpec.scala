@@ -1186,4 +1186,67 @@ class SnapshotCatalogSpec extends AnyFunSuite {
       "SELECT sum(score) AS s, count(*) AS n, count(score) AS ns " +
         "FROM spec_cat.t_evrw_p").head().toSeq === Seq(expP, 50L, 50L))
   }
+
+  test("CREATE and ADD COLUMN refuse types parquet cannot encode") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{CalendarIntervalType, LongType, StructField, StructType}
+    val fs = new org.apache.hadoop.fs.Path(warehouse)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listing(root: String): Seq[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .toSeq.sorted
+    }
+    // CREATE: `createTable` refuses every schema (a snapshot table
+    // needs a defining generation), so the type check that matters is
+    // CTAS's `stageCreate`, which must refuse before staging anything.
+    val create = intercept[UnsupportedOperationException](
+      cat.asInstanceOf[org.apache.spark.sql.connector.catalog.StagingTableCatalog]
+        .stageCreate(ident("t_interval"),
+          StructType(Seq(StructField("k", LongType),
+            StructField("span", CalendarIntervalType))),
+          Array.empty, new java.util.HashMap[String, String]()))
+    assert(create.getMessage.contains("interval"))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$warehouse/t_interval")))
+    // ADD COLUMN: refused before the alter publishes a generation.
+    val t = s"$warehouse/t_interval_alter"
+    SnapshotTable.commit(Seq(1L, 2L).toDF("k"), t, 1L)
+    val before = listing(t)
+    val add = intercept[UnsupportedOperationException](
+      cat.alterTable(ident("t_interval_alter"),
+        org.apache.spark.sql.connector.catalog.TableChange.addColumn(
+          Array("span"), CalendarIntervalType)))
+    assert(add.getMessage.contains("span"))
+    assert(SnapshotTable.generations(spark, t) === Seq(1L))
+    assert(listing(t) === before)
+  }
+
+  test("a zero-row write publishes one schema husk, batch and streaming") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    // A PARTITIONED table's writers open per partition value, so a
+    // zero-row CTAS stages no file at all and the commit writes the
+    // schema-carrying husk driver-side.
+    spark.sql("CREATE TABLE spec_cat.t_husk PARTITIONED BY (p) AS " +
+      "SELECT id AS k, CAST(id % 2 AS INT) AS p, CAST(id AS STRING) AS s " +
+      "FROM range(10) WHERE id > 100")
+    val t = s"$warehouse/t_husk"
+    assert(SnapshotTable.generations(spark, t) === Seq(1L))
+    val files = SnapshotTable.listFiles(spark, t, 1L)
+    assert(files.size === 1 && files.head.endsWith("/empty-00000.parquet"))
+    val want = Seq(("k", LongType), ("p", IntegerType), ("s", StringType))
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => (f.name, f.dataType))
+    assert(shape(spark.read.parquet(files.head)) === want)
+    val batch = spark.table("spec_cat.t_husk")
+    assert(shape(batch) === want)
+    assert(batch.collect().isEmpty)
+    val ckpt = graft.Scratch.dir("husk_stream_ckpt")
+    val q = spark.readStream.table("spec_cat.t_husk")
+      .writeStream.format("memory").queryName("husk_tail")
+      .option("checkpointLocation", ckpt)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(shape(spark.table("husk_tail")) === want)
+    assert(spark.table("husk_tail").count() === 0L)
+  }
 }

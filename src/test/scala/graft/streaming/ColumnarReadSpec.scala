@@ -6,19 +6,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.SnapshotTable
 
-/** The vectorized connector decode ([[SnapshotColumnarReader]]) —
-  * row/columnar parity across every supported type including nulls,
-  * schema-evolution null vectors, and the plan-shape evidence that the
-  * columnar path actually engages (the value gates alone cannot show
-  * WHICH decoder produced the rows).
+/** The connector's read path through Spark's own parquet reader —
+  * value parity with `spark.read.parquet` across every flat type
+  * including nulls, schema-evolution null vectors, row-group skipping
+  * inside admitted files, and the plan-shape evidence that the
+  * vectorized path actually engages (the value gates alone cannot show
+  * WHICH reader mode produced the rows).
   */
 class ColumnarReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val provider = classOf[SnapshotSourceProvider].getName
 
-  test("columnar and row decoders agree on every type, nulls included") {
-    import spark.implicits._
+  test("connector reads every type as Spark's reader does, nulls included") {
     val t = graft.Scratch.dir("columnar_parity")
     val df = spark.range(10000L).select(
       col("id").as("k"),
@@ -37,27 +37,15 @@ class ColumnarReadSpec extends AnyFunSuite {
         .as("dt"))
     SnapshotTable.commit(df.repartition(3), t, 1L)
 
-    def readAll(rowDecode: Boolean) = {
-      // The factory consults the property at planning; scope it to the
-      // read and restore after.
-      val saved = System.getProperty("graft.snapshot.rowDecode")
-      try {
-        if (rowDecode) System.setProperty("graft.snapshot.rowDecode", "true")
-        else System.clearProperty("graft.snapshot.rowDecode")
-        spark.read.format(provider).load(t)
-          .orderBy("k").collect().map(_.toSeq.map {
-            case a: Array[Byte] => a.toSeq
-            case v => v
-          })
-      } finally {
-        if (saved == null) System.clearProperty("graft.snapshot.rowDecode")
-        else System.setProperty("graft.snapshot.rowDecode", saved)
-      }
-    }
-    val colwise = readAll(rowDecode = false)
-    val rowwise = readAll(rowDecode = true)
-    assert(colwise.length === 10000)
-    assert(colwise.toSeq === rowwise.toSeq)
+    def canon(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("k").collect().map(_.toSeq.map {
+        case a: Array[Byte] => a.toSeq
+        case v => v
+      }).toSeq
+    val got = canon(spark.read.format(provider).load(t))
+    assert(got.length === 10000)
+    assert(got === canon(
+      spark.read.parquet(SnapshotTable.listFiles(spark, t, 1L): _*)))
     // And the columnar path actually engaged.
     val plan = spark.read.format(provider).load(t).select("k")
       .queryExecution.executedPlan.toString
@@ -66,58 +54,55 @@ class ColumnarReadSpec extends AnyFunSuite {
   }
 
   test("pushed range probes skip row groups inside admitted files") {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val t = graft.Scratch.dir("rowgroup_skip")
-    val file = s"$t/data/gen=1/part-00000.parquet"
+    val dir = s"$t/data/gen=1"
     // One sorted multi-row-group file (tiny row groups force many
     // groups — production's many-groups-per-GB-file shape in
     // miniature); publish it as a plain path-only manifest so FILE
     // pruning cannot help and any skipping must happen at the row
     // group level.
-    val msg = SnapshotSource.messageTypeOf(StructType(Seq(
-      StructField("k", LongType), StructField("v", LongType))))
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sessionState.newHadoopConf())
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(msg, conf)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withConf(conf).withRowGroupSize(4096L).build()
-    val fac = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
-    (0L until 20000L).foreach { k =>
-      val g = fac.newGroup()
-      g.add("k", k)
-      g.add("v", k * 2)
-      w.write(g)
-    }
-    w.close()
+    spark.range(20000L).select(col("id").as("k"), (col("id") * 2).as("v"))
+      .coalesce(1).write.option("parquet.block.size", "4096").parquet(dir)
+    val file = SnapshotTable.freshFiles(spark, dir).head
     SnapshotTable.publish(spark, t, 1L, Seq(file))
-    val nGroups = {
+    val blocks = {
+      import scala.jdk.CollectionConverters._
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file), conf))
-      try r.getFooter.getBlocks.size finally r.close()
+          new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf()))
+      try r.getFooter.getBlocks.asScala.toSeq finally r.close()
     }
-    assert(nGroups >= 4, s"fixture must span several row groups; got $nGroups")
-    val d0 = SnapshotColumnarReader.groupsDecoded.get()
-    val s0 = SnapshotColumnarReader.groupsSkipped.get()
-    val got = spark.read.format(provider).load(t)
-      .filter(col("k") >= 100L && col("k") <= 200L)
-      .agg(sum("v")).head().getLong(0)
+    assert(blocks.size >= 4, s"fixture must span several row groups; got ${blocks.size}")
+    val admitted = blocks.filter(b =>
+      SnapshotSource.groupAdmits(Map("k" -> ((100L, 200L))), Map.empty, b))
+    assert(admitted.nonEmpty && admitted.size <= 2,
+      s"the [100, 200] probe spans at most 2 of ${blocks.size} sorted groups; " +
+        s"admitted ${admitted.size}")
+
+    // Rows the connector's scan node handed to Spark (its numOutputRows
+    // metric, counted before the residual filter): row groups Spark's
+    // parquet reader skipped never reach it. AQE off keeps the scan
+    // node in the executed plan.
+    def sumAndScanned(df: org.apache.spark.sql.DataFrame): (Long, Long) =
+      TestSpark.withConf("spark.sql.adaptive.enabled" -> "false") {
+        val q = df.agg(sum("v"))
+        val got = q.collect().head.getLong(0)
+        val scanned = q.queryExecution.executedPlan.collectFirst {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.metrics("numOutputRows").value
+        }.get
+        (got, scanned)
+      }
+    val (got, scanned) = sumAndScanned(spark.read.format(provider).load(t)
+      .filter(col("k") >= 100L && col("k") <= 200L))
     assert(got === (100L to 200L).map(_ * 2).sum)
-    val decoded = SnapshotColumnarReader.groupsDecoded.get() - d0
-    val skipped = SnapshotColumnarReader.groupsSkipped.get() - s0
-    assert(decoded + skipped === nGroups.toLong,
-      s"every group must be decided: $decoded decoded + $skipped skipped != $nGroups")
-    assert(skipped > 0, "a narrow range over a sorted file must skip groups")
-    assert(decoded <= 2L,
-      s"the [100, 200] probe spans at most 2 of $nGroups sorted groups; decoded $decoded")
-    // An unfiltered scan still decodes everything (no false skips).
-    // sum, not count(): a bare count() is now answered from MANIFEST
-    // stats (the aggregate pushdown) and decodes zero groups.
-    val d1 = SnapshotColumnarReader.groupsDecoded.get()
-    assert(spark.read.format(provider).load(t).agg(sum("v")).head().getLong(0)
-      === (0L until 20000L).map(_ * 2).sum)
-    assert(SnapshotColumnarReader.groupsDecoded.get() - d1 === nGroups.toLong)
+    assert(scanned >= 101L && scanned <= admitted.map(_.getRowCount).sum,
+      s"the probe must read only its admitted row groups; read $scanned rows")
+    // An unfiltered scan still reads everything (no false skips).
+    // sum, not count(): a bare count() is answered from MANIFEST stats
+    // (the aggregate pushdown) and reads no row group at all.
+    assert(sumAndScanned(spark.read.format(provider).load(t)) ===
+      (((0L until 20000L).map(_ * 2).sum, 20000L)))
   }
 
   test("schema evolution serves null vectors for columns the file never carried") {

@@ -9,10 +9,10 @@ import graft.sources.SnapshotTable
 
 /** DECIMAL and ARRAY columns through the snapshot connector — the
   * round-trip the money/embedding tables need to live in the catalog:
-  * both physical decimal forms (INT64 for precision ≤ 18, FIXED_LEN
-  * bytes above), the three-level list encode, null arrays and null
-  * elements, parity between the connector's decoders and Spark's own
-  * parquet reader over the SAME committed files, and decode of files
+  * both physical decimal forms (INT32/INT64 unscaled up to 18 digits,
+  * FIXED_LEN bytes above), the three-level list encode, null arrays and null
+  * elements, parity between the connector and a plain
+  * `spark.read.parquet` over the SAME committed files, and decode of files
   * Spark's native writer produced (INT32-backed small decimals,
   * required list elements).
   */
@@ -51,30 +51,20 @@ class DecimalArrayReadSpec extends AnyFunSuite {
       case v => v
     }).toSeq
 
-  test("connector write+read round-trips decimals and arrays, both decoders") {
+  test("connector write+read round-trips decimals and arrays") {
     val t = graft.Scratch.dir("decarr_roundtrip")
     val df = sourceFrame
     df.repartition(3).write.format(provider).option("path", t)
       .mode("append").save()
-
-    def readAll(rowDecode: Boolean) = {
-      val saved = System.getProperty("graft.snapshot.rowDecode")
-      try {
-        if (rowDecode) System.setProperty("graft.snapshot.rowDecode", "true")
-        else System.clearProperty("graft.snapshot.rowDecode")
-        canon(spark.read.format(provider).load(t).orderBy("k").collect())
-      } finally {
-        if (saved == null) System.clearProperty("graft.snapshot.rowDecode")
-        else System.setProperty("graft.snapshot.rowDecode", saved)
-      }
-    }
-    // Ground truth: Spark's own parquet reader over the committed files.
+    // Ground truth: a plain parquet read of the committed files, and
+    // the source frame itself (the write must not change a value).
     val truth = canon(spark.read
       .parquet(SnapshotTable.listFiles(spark, t, 1L): _*)
       .orderBy("k").collect())
     assert(truth.length === 5000)
-    assert(readAll(rowDecode = true) === truth)
-    assert(readAll(rowDecode = false) === truth)
+    assert(truth === canon(df.orderBy("k").collect()))
+    assert(canon(spark.read.format(provider).load(t).orderBy("k").collect())
+      === truth)
   }
 
   test("connector decodes Spark-native-written decimal and array files") {
@@ -210,7 +200,7 @@ class DecimalArrayReadSpec extends AnyFunSuite {
     assert(SnapshotSource.lastCountPushdown(t) === Some(false))
   }
 
-  test("ARRAY columns decode VECTORIZED: parity with the row path, and faster on embeddings") {
+  test("ARRAY columns decode VECTORIZED and match Spark's reader") {
     val t = graft.Scratch.dir("arr_columnar")
     // Embedding-shaped table: float arrays with null elements, whole
     // null arrays, EMPTY arrays, string arrays — every definition-level
@@ -227,47 +217,23 @@ class DecimalArrayReadSpec extends AnyFunSuite {
       array(concat(lit("w_"), col("id") % 50), lit("x")).as("words"))
     df.repartition(4).write.format(provider).option("path", t)
       .mode("append").save()
-
-    def withDecoder[A](rowDecode: Boolean)(body: => A): A = {
-      val saved = System.getProperty("graft.snapshot.rowDecode")
-      try {
-        if (rowDecode) System.setProperty("graft.snapshot.rowDecode", "true")
-        else System.clearProperty("graft.snapshot.rowDecode")
-        body
-      } finally {
-        if (saved == null) System.clearProperty("graft.snapshot.rowDecode")
-        else System.setProperty("graft.snapshot.rowDecode", saved)
-      }
-    }
     val truth = canon(spark.read
       .parquet(SnapshotTable.listFiles(spark, t, 1L): _*)
       .orderBy("k").collect())
     assert(truth.length === 40000)
-    val rowRows = withDecoder(rowDecode = true)(
-      canon(spark.read.format(provider).load(t).orderBy("k").collect()))
-    val colRows = withDecoder(rowDecode = false)(
-      canon(spark.read.format(provider).load(t).orderBy("k").collect()))
-    assert(rowRows === truth)
-    assert(colRows === truth)
-    // Micro-bench, informational (a hard timing assert would flake on
-    // a loaded machine): decode-dominated aggregate, warmed, min of 2.
-    def bench(rowDecode: Boolean): Long = withDecoder(rowDecode) {
-      def once(): Long = {
-        val t0 = System.nanoTime()
-        spark.read.format(provider).load(t)
-          .selectExpr("sum(size(emb))", "sum(k)").head()
-        (System.nanoTime() - t0) / 1000000L
-      }
-      once() // warm
-      math.min(once(), once())
+    assert(canon(spark.read.format(provider).load(t).orderBy("k").collect())
+      === truth)
+    // With Spark's nested vectorized reader on, arrays take the
+    // vectorized path and still match.
+    TestSpark.withConf(
+        "spark.sql.parquet.enableNestedColumnVectorizedReader" -> "true") {
+      val plan = spark.read.format(provider).load(t).select("emb")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"),
+        s"array columns must take the vectorized path; got:\n$plan")
+      assert(canon(spark.read.format(provider).load(t).orderBy("k").collect())
+        === truth)
     }
-    info(s"array decode over 40k rows x 4-float embeddings (agg): " +
-      s"row=${bench(rowDecode = true)} ms, " +
-      s"columnar=${bench(rowDecode = false)} ms")
-    // The columnar path must actually be the one taken (the factory
-    // advertises it for this schema).
-    assert(SnapshotColumnarReader.supports(
-      spark.read.format(provider).load(t).schema))
   }
 
   test("MIN/MAX push down to zone maps; coverage gaps and filters refuse") {
@@ -427,6 +393,22 @@ class DecimalArrayReadSpec extends AnyFunSuite {
       .write.format(provider).option("path", t).mode("append").save()
     val files = SnapshotTable.listFiles(spark, t, 1L)
     assert(files.size === 4)
+    // The physical type the zone maps rest on: INT64 micros, not INT96.
+    val tsType = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(files.head),
+          spark.sessionState.newHadoopConf()))
+      try {
+        val s = r.getFooter.getFileMetaData.getSchema
+        s.getType(s.getFieldIndex("ts")).asPrimitiveType()
+      } finally r.close()
+    }
+    assert(tsType.getPrimitiveTypeName ===
+      org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+    assert(tsType.getLogicalTypeAnnotation ===
+      org.apache.parquet.schema.LogicalTypeAnnotation.timestampType(true,
+        org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS))
     SnapshotTable.publishStats(spark, t, 2L,
       SnapshotTable.footerStats(spark, files, Seq("ts")))
     // ids 1000..1599 — inside one range slice of the sorted layout.
