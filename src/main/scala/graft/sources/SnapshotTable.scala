@@ -1432,21 +1432,44 @@ object SnapshotTable {
     }
   }
 
-  /** Best-effort [[fileMeta]] for the explicit-row publish forms:
-    * callers hand zone-map rows whose paths the layer never wrote (a
-    * spec's synthetic layout, a foreign file registered by stats), so
-    * an unopenable path records NO meta rather than failing the
-    * publish — the consumers all fall back per file.
+  /** Best-effort footer metadata for the explicit-row publish forms,
+    * ONE footer open per file: `(row count, on-disk bytes, NULL count
+    * per named column)`. Callers hand zone-map rows whose paths the
+    * layer never wrote (a spec's synthetic layout, a foreign file
+    * registered by stats), so an unopenable path records NO meta rather
+    * than failing the publish — the consumers all fall back per file.
+    * A column's NULL count sums its row groups', `None` when any block
+    * leaves the statistic unset (legacy writers).
     */
-  private def fileMetaOpt(spark: SparkSession,
-      paths: Seq[String]): Map[String, (Long, Long)] =
-    parFiles(paths) { f =>
-      try fileMeta(spark, Seq(f)).map(m => m._1 -> ((m._2, m._3)))
-      catch { case _: Exception => Seq.empty }
+  private def footerMetaOpt(spark: SparkSession,
+      files: Seq[(String, Seq[String])])
+      : Map[String, (Long, Long, Map[String, Option[Long]])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    parFiles(files) { case (f, cols) =>
+      try {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try {
+          import scala.jdk.CollectionConverters._
+          val blocks = r.getFooter.getBlocks.asScala
+          val nulls = cols.map { c =>
+            val per = blocks.map(_.getColumns.asScala
+              .find(_.getPath.toDotString == c)
+              .map(_.getStatistics)
+              .filter(s => s != null && s.isNumNullsSet)
+              .map(_.getNumNulls))
+            c -> (if (per.nonEmpty && per.forall(_.isDefined))
+              Some(per.flatten.sum) else None)
+          }.toMap
+          Seq(f -> ((r.getRecordCount, in.getLength, nulls)))
+        } finally r.close()
+      } catch { case _: Exception => Seq.empty }
     }.flatten.toMap
+  }
 
   /** [[fileMeta]] as ready-to-publish manifest rows (sorted by path) —
-    * BEST-EFFORT like [[fileMetaOpt]]: the explicit-path publish forms
+    * BEST-EFFORT like [[footerMetaOpt]]: the explicit-path publish forms
     * ([[publish]], [[stageFiles]], [[commitDeletes]]) accept paths this
     * layer never wrote (a spec's synthetic layout, a foreign file
     * registered by stats), so an unopenable footer records NO stats
@@ -1456,7 +1479,7 @@ object SnapshotTable {
   private def metaRows(spark: SparkSession, paths: Seq[String],
       kind: Option[String] = None, seq: Option[Long] = None,
       selfWritten: Boolean = false): Seq[ManifestRow] = {
-    val meta = fileMetaOpt(spark, paths)
+    val meta = footerMetaOpt(spark, paths.map(_ -> Nil))
     // SELF-WRITTEN publishes (the connector's own commit/append/rewrite
     // paths — this layer just closed those footers) REQUIRE the stats:
     // a transient footer-read failure silently publishing stat-less
@@ -1512,7 +1535,7 @@ object SnapshotTable {
   def publishWithStats(spark: SparkSession, table: String, gen: Long,
       rows: Seq[(String, Long, Long)],
       action: String = "append"): Unit = {
-    val meta = fileMetaOpt(spark, rows.map(_._1).distinct.sorted)
+    val meta = footerMetaOpt(spark, rows.map(_._1).distinct.sorted.map(_ -> Nil))
     writeManifest(spark, table, gen, replace = false,
       rows.sortBy(_._1).map { case (p, mn, mx) =>
         ManifestRow(p, minKey = Some(mn), maxKey = Some(mx),
@@ -1533,53 +1556,21 @@ object SnapshotTable {
   def publishStats(spark: SparkSession, table: String, gen: Long,
       rows: Seq[(String, String, Long, Long)],
       action: String = "append"): Unit = {
-    val meta = fileMetaOpt(spark, rows.map(_._1).distinct.sorted)
-    // Per-(file, column) NULL counts off the same footers — what makes
-    // a zone row's non-null row count derivable (nRows − nNulls): the
-    // sound "rows provably sorting before this file" proof the TopN
-    // pushdown needs under NULLS LAST orderings. Best-effort like the
-    // meta pass (an unreadable footer or unset statistic records None
-    // and the file neither proves nor excludes).
-    val nulls = footerNullCounts(spark, rows.map(r => (r._1, r._2)).distinct)
+    // Per-(file, column) NULL counts ride the same footer open as the
+    // row count and bytes — what makes a zone row's non-null row count
+    // derivable (nRows − nNulls): the sound "rows provably sorting
+    // before this file" proof the TopN pushdown needs under NULLS LAST
+    // orderings. An unreadable footer or unset statistic records None
+    // and the file neither proves nor excludes.
+    val meta = footerMetaOpt(spark, rows.groupBy(_._1).toSeq
+      .map { case (p, rs) => p -> rs.map(_._2).distinct })
     writeManifest(spark, table, gen, replace = false,
       rows.sortBy(r => (r._1, r._2)).map { case (p, c, mn, mx) =>
+        val m = meta.get(p)
         ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
-          nRows = meta.get(p).map(_._1), bytes = meta.get(p).map(_._2),
-          nNulls = nulls.getOrElse((p, c), None)) },
+          nRows = m.map(_._1), bytes = m.map(_._2),
+          nNulls = m.flatMap(_._3.get(c)).flatten) },
       Some(action))
-  }
-
-  /** NULL counts per `(file, column)` from the parquet footers — one
-    * footer open per file, summed across row groups; `None` when any
-    * block leaves the statistic unset (legacy writers) or the footer
-    * is unreadable.
-    */
-  private def footerNullCounts(spark: SparkSession,
-      pairs: Seq[(String, String)]): Map[(String, String), Option[Long]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    parFiles(pairs.groupBy(_._1).toSeq) { case (f, ps) =>
-      val cols = ps.map(_._2).distinct
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          import scala.jdk.CollectionConverters._
-          val blocks = r.getFooter.getBlocks.asScala
-          cols.map { c =>
-            val per = blocks.map(_.getColumns.asScala
-              .find(_.getPath.toDotString == c)
-              .map(_.getStatistics)
-              .filter(s => s != null && s.isNumNullsSet)
-              .map(_.getNumNulls))
-            (f, c) -> (if (per.nonEmpty && per.forall(_.isDefined))
-              Some(per.flatten.sum) else None)
-          }
-        } finally r.close()
-      } catch {
-        case _: Exception => cols.map(c => (f, c) -> Option.empty[Long])
-      }
-    }.flatten.toMap
   }
 
   /** Files of generation `gen` admitted by CONJUNCTIVE per-column
@@ -2252,8 +2243,8 @@ object SnapshotTable {
     require(dels.isEmpty && !seg,
       s"analyze needs a plain full-carry lineage at $table")
     val stats = footerStats(spark, data, columns)
-    val nulls = footerNullCounts(spark,
-      stats.map(r => (r._1, r._2)).distinct)
+    val nulls = footerMetaOpt(spark, stats.groupBy(_._1).toSeq
+      .map { case (p, rs) => p -> rs.map(_._2).distinct })
     val prev = readManifestRows(spark, manifestPath(table, gen))
     val metaOf: Map[String, (Option[Long], Option[Long])] =
       recordedFileStats(spark, table, gen)
@@ -2261,7 +2252,7 @@ object SnapshotTable {
       ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
         nRows = metaOf.get(p).flatMap(_._1),
         bytes = metaOf.get(p).flatMap(_._2),
-        nNulls = nulls.getOrElse((p, c), None))
+        nNulls = nulls.get(p).flatMap(_._3.get(c)).flatten)
     }
     val kept = prev.filterNot(_.keyCol.exists(columns.contains))
     writeManifest(spark, table, gen + 1, replace = false,

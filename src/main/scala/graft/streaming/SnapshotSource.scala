@@ -301,11 +301,15 @@ private[graft] object SnapshotSource {
     * row-group footer statistics): integers directly; DATE as epoch
     * days (INT32 physical); TIMESTAMP as epoch micros (the connector
     * writer's INT64 form — files storing INT96 carry no usable stats
-    * and admit conservatively anyway); DECIMAL as the unscaled value
-    * at the COLUMN's scale, EXACT-OR-REFUSE: a literal that would need
-    * rescaling/rounding yields None and pruning degrades to
-    * admit-everything, because a wrong unscaled bound would skip files
-    * holding matching rows — the one failure pruning must never have.
+    * and admit conservatively anyway); TIMESTAMP_NTZ as its wall
+    * clock's micros at UTC (Spark's INT64 form of it); DECIMAL as the
+    * unscaled value at the COLUMN's scale, EXACT-OR-REFUSE: a literal
+    * that would need rescaling/rounding yields None and pruning
+    * degrades to admit-everything, because a wrong unscaled bound
+    * would skip files holding matching rows — the one failure pruning
+    * must never have. Literals arrive in V1's external forms only: V2
+    * predicates convert at the boundary
+    * ([[org.apache.spark.sql.GraftBridge.toV1]]).
     */
   def physicalLong(dt: Option[DataType], v: Any): Option[Long] = v match {
     case l: java.lang.Long => Some(l.longValue)
@@ -320,18 +324,13 @@ private[graft] object SnapshotSource {
       Some(Math.addExact(
         Math.multiplyExact(t.getEpochSecond, 1000000L),
         (t.getNano / 1000).toLong))
+    case t: java.time.LocalDateTime =>
+      Some(Math.addExact(
+        Math.multiplyExact(t.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L),
+        (t.getNano / 1000).toLong))
     case b: java.math.BigDecimal => dt match {
       case Some(d: DecimalType) =>
         try Some(b.setScale(d.scale).unscaledValue.longValueExact)
-        catch { case _: ArithmeticException => None }
-      case _ => None
-    }
-    case d: org.apache.spark.sql.types.Decimal => dt match {
-      // The V2-literal form (Catalyst-internal value): rescale to the
-      // column's scale exactly or refuse.
-      case Some(t: DecimalType) =>
-        try Some(d.toJavaBigDecimal.setScale(t.scale)
-          .unscaledValue.longValueExact)
         catch { case _: ArithmeticException => None }
       case _ => None
     }
@@ -340,12 +339,12 @@ private[graft] object SnapshotSource {
 
   /** A pushed filter as a zone-map bound: `Some(column -> (lo, hi))`
     * for comparisons [[physicalLong]] can translate into the column's
-    * physical domain — integer, date, timestamp and exact-scale
-    * decimal literals all prune.
+    * physical domain (typed by `schema`) — integer, date, timestamp
+    * and exact-scale decimal literals all prune.
     */
-  def boundOf(f: Filter,
-      typeOf: String => Option[DataType] = _ => None): Option[(String, (Long, Long))] = {
-    def p(c: String, v: Any): Option[Long] = physicalLong(typeOf(c), v)
+  def boundOf(f: Filter, schema: StructType): Option[(String, (Long, Long))] = {
+    def p(c: String, v: Any): Option[Long] =
+      physicalLong(schema.fields.find(_.name == c).map(_.dataType), v)
     f match {
       case EqualTo(c, v) => p(c, v).map(l => c -> ((l, l)))
       case GreaterThan(c, v) =>
@@ -357,6 +356,8 @@ private[graft] object SnapshotSource {
       // An IN list prunes zone maps by its envelope [min, max] —
       // conservative (a file spanning the gap between two values still
       // admits), but the bloom probe below handles the exact membership.
+      // Every RUNTIME filter arrives in this shape: Spark renders a
+      // join's build-side keys as one IN over literals.
       case In(c, vs) if vs.nonEmpty =>
         val ls = vs.toSeq.map(v => p(c, v))
         if (ls.forall(_.isDefined)) {
@@ -371,20 +372,12 @@ private[graft] object SnapshotSource {
     * (interval intersection per column).
     */
   def boundsOf(filters: Array[Filter],
-      schema: StructType = new StructType()): Map[String, (Long, Long)] = {
-    val typeOf: String => Option[DataType] =
-      c => schema.fields.find(_.name == c).map(_.dataType)
-    filters.flatMap(boundOf(_, typeOf)).groupBy(_._1).map { case (c, bs) =>
+      schema: StructType): Map[String, (Long, Long)] =
+    filters.flatMap(boundOf(_, schema)).groupBy(_._1).map { case (c, bs) =>
       c -> ((bs.map(_._2._1).max, bs.map(_._2._2).min))
     }
-  }
 
-  /** [[boundOf]] over V2 predicates (the DELETE pushdown form):
-    * per-column zone bounds from the integer comparisons in the
-    * conjunction, every unrecognized conjunct conservatively ignored —
-    * SOUND for pruning because a file that cannot satisfy one conjunct
-    * cannot satisfy the AND of all of them.
-    */
+  /** A V2 column reference's name (TopN and aggregate pushdown). */
   private[streaming] def v2Col(
       e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
     e match {
@@ -392,123 +385,6 @@ private[graft] object SnapshotSource {
           if r.fieldNames.length == 1 => Some(r.fieldNames.head)
       case _ => None
     }
-
-  private def v2Long(
-      e: org.apache.spark.sql.connector.expressions.Expression): Option[Long] =
-    e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        l.value() match {
-          case v: java.lang.Long => Some(v.longValue)
-          case v: java.lang.Integer => Some(v.longValue)
-          case _ => None
-        }
-      case _ => None
-    }
-
-  /** [[v2Long]] widened through [[physicalLong]]: V2 literals carry
-    * Catalyst-INTERNAL values (dates already Int days, timestamps Long
-    * micros — covered by the integer cases — and decimals as
-    * `Decimal`, rescaled to the column's scale exactly or refused).
-    */
-  private def v2PhysLong(
-      e: org.apache.spark.sql.connector.expressions.Expression,
-      dt: Option[DataType]): Option[Long] =
-    e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        physicalLong(dt, l.value())
-      case _ => None
-    }
-
-  def v2BoundsOf(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate],
-      schema: StructType = new StructType())
-      : Map[String, (Long, Long)] = {
-    val typeOf: String => Option[DataType] =
-      c => schema.fields.find(_.name == c).map(_.dataType)
-    def one(
-        p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-        : Seq[(String, (Long, Long))] = p.name() match {
-      case "AND" => p.children().toSeq.collect {
-        case q: org.apache.spark.sql.connector.expressions.filter.Predicate => q
-      }.flatMap(one)
-      case op @ ("=" | ">" | ">=" | "<" | "<=") => p.children() match {
-        case Array(a, b) => (v2Col(a), v2Col(a).flatMap(c =>
-            v2PhysLong(b, typeOf(c)))) match {
-          case (Some(c), Some(v)) => op match {
-            case "=" => Seq(c -> ((v, v)))
-            case ">" if v < Long.MaxValue => Seq(c -> ((v + 1, Long.MaxValue)))
-            case ">=" => Seq(c -> ((v, Long.MaxValue)))
-            case "<" if v > Long.MinValue => Seq(c -> ((Long.MinValue, v - 1)))
-            case "<=" => Seq(c -> ((Long.MinValue, v)))
-            case _ => Seq.empty
-          }
-          case _ => Seq.empty
-        }
-        case _ => Seq.empty
-      }
-      // An IN list prunes zone maps by its [min, max] envelope — the
-      // V1 boundOf rule, and the shape every RUNTIME filter arrives in
-      // (translateRuntimeFilterV2 renders the build side's keys as one
-      // IN over literals); the bloom probes handle exact membership.
-      case "IN" => p.children() match {
-        case Array(a, rest @ _*) =>
-          v2Col(a) match {
-            case Some(c) =>
-              val ls = rest.map(v2PhysLong(_, typeOf(c)))
-              if (ls.nonEmpty && ls.forall(_.isDefined)) {
-                val l = ls.flatten
-                Seq(c -> ((l.min, l.max)))
-              } else Seq.empty
-            case None => Seq.empty
-          }
-        case _ => Seq.empty
-      }
-      case _ => Seq.empty
-    }
-    predicates.flatMap(one).groupBy(_._1).map { case (c, bs) =>
-      c -> ((bs.map(_._2._1).max, bs.map(_._2._2).min))
-    }
-  }
-
-  /** [[probesOf]] over V2 predicates — the DELETE pushdown's
-    * file-level BLOOM hook, mirroring the batch scan's: exact point
-    * probes from `=` / `IN` conjuncts on integer columns (several
-    * probes on one column intersect). Unrecognized conjuncts are
-    * ignored, which is SOUND for pruning (a file admitted by the
-    * recognized conjuncts is a superset of files satisfying the AND).
-    */
-  def v2ProbesOf(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Map[String, Seq[Long]] = {
-    def one(
-        p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-        : Seq[(String, Seq[Long])] = p.name() match {
-      case "AND" => p.children().toSeq.collect {
-        case q: org.apache.spark.sql.connector.expressions.filter.Predicate => q
-      }.flatMap(one)
-      case "=" => p.children() match {
-        case Array(a, b) => (v2Col(a), v2Long(b)) match {
-          case (Some(c), Some(v)) => Seq(c -> Seq(v))
-          case _ => Seq.empty
-        }
-        case _ => Seq.empty
-      }
-      case "IN" => p.children() match {
-        case Array(a, rest @ _*) =>
-          val vs = rest.map(v2Long)
-          (v2Col(a), vs) match {
-            case (Some(c), ls) if ls.nonEmpty && ls.forall(_.isDefined) =>
-              Seq(c -> ls.flatten.toSeq)
-            case _ => Seq.empty
-          }
-        case _ => Seq.empty
-      }
-      case _ => Seq.empty
-    }
-    predicates.flatMap(one).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-  }
 
   /** An IN list's values as longs, when every member is an integer
     * literal (the types the bloom sidecar hashes portably).
@@ -526,7 +402,9 @@ private[graft] object SnapshotSource {
     * pruning hook: `EqualTo`/`In` on integer columns. Several probe
     * filters on one column conjoin, so their value sets intersect; an
     * empty intersection (`c = 1 AND c IN (2)`) is an unsatisfiable
-    * scan the planner may serve with zero files.
+    * scan the planner may serve with zero files. DATE and TIMESTAMP
+    * literals never probe: the sidecar hashes `k.cast("string")`, a
+    * rendering their physical longs do not share.
     */
   def probesOf(filters: Array[Filter]): Map[String, Seq[Long]] = {
     def valuesOf(f: Filter): Option[(String, Seq[Long])] = f match {
@@ -564,53 +442,34 @@ private[graft] object SnapshotSource {
     }
   }
 
-  /** [[strProbesOf]] over V2 predicates (the DELETE pushdown and
-    * runtime-filter form): string literals arrive as Catalyst-internal
-    * `UTF8String`s. Same conjunction/intersection rules as
-    * [[v2ProbesOf]]; unrecognized conjuncts are ignored (sound — the
-    * admitted set is a superset of the AND's matches).
+  /** Whether a filter yields a zone-map bound or a bloom probe (every
+    * integer probe is also a bound) — the rule both scan builders push
+    * by, and what "a filter prunes" means to the planning guards.
     */
-  def v2StrProbesOf(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Map[String, Seq[String]] = {
-    def v2Str(
-        e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-          l.value() match {
-            case v: UTF8String => Some(v.toString)
-            case v: String => Some(v)
-            case _ => None
-          }
-        case _ => None
-      }
-    def one(
-        p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-        : Seq[(String, Seq[String])] = p.name() match {
-      case "AND" => p.children().toSeq.collect {
-        case q: org.apache.spark.sql.connector.expressions.filter.Predicate => q
-      }.flatMap(one)
-      case "=" => p.children() match {
-        case Array(a, b) => (v2Col(a), v2Str(b)) match {
-          case (Some(c), Some(v)) => Seq(c -> Seq(v))
-          case _ => Seq.empty
-        }
-        case _ => Seq.empty
-      }
-      case "IN" => p.children() match {
-        case Array(a, rest @ _*) =>
-          val vs = rest.map(v2Str)
-          (v2Col(a), vs) match {
-            case (Some(c), ls) if ls.nonEmpty && ls.forall(_.isDefined) =>
-              Seq(c -> ls.flatten.toSeq)
-            case _ => Seq.empty
-          }
-        case _ => Seq.empty
-      }
-      case _ => Seq.empty
-    }
-    predicates.flatMap(one).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
+  def pushable(f: Filter, schema: StructType): Boolean =
+    boundOf(f, schema).isDefined || strProbesOf(Array(f)).nonEmpty
+
+  /** The files of generation `gen` that `filters` cannot rule out —
+    * the two-level file skipping batch planning and DELETE share:
+    * zone-map bounds first, then the bloom sidecars for the point
+    * probes (the axis zone maps cannot prune when every file spans the
+    * column's domain), integer and string keys alike, both rendered as
+    * the build side's `k.cast("string")`. Best-effort: an absent index
+    * or an unindexed file admits conservatively, so callers must keep
+    * every filter as a residual. An unsatisfiable probe conjunction
+    * (empty intersection) admits nothing.
+    */
+  def admit(spark: SparkSession, table: String, gen: Long,
+      filters: Array[Filter], schema: StructType): Seq[String] = {
+    val probes = probesOf(filters).toSeq.map { case (c, vs) =>
+      c -> vs.map(_.toString) } ++ strProbesOf(filters).toSeq
+    probes.foldLeft(
+        SnapshotTable.admittedFiles(spark, table, gen, boundsOf(filters, schema))) {
+      case (files, (c, vs)) =>
+        if (vs.isEmpty) Seq.empty
+        else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
+          SnapshotTable.bloomAdmittedFilesRendered(spark, table, c, vs, files)
+        else files
     }
   }
 
@@ -712,13 +571,20 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
   /** The pushed DELETE predicates as one SQL conjunction, via the
     * public V2-expression SQL builder — `None` when any predicate has
     * no SQL rendering (Spark then refuses the DELETE up front through
-    * [[canDeleteWhere]] instead of failing mid-commit).
+    * [[canDeleteWhere]] instead of failing mid-commit). Literals render
+    * as Catalyst's typed SQL: the builder's own rendering prints a DATE
+    * or TIMESTAMP as its internal number, which the re-parsed predicate
+    * would then compare against the column as an INT.
     */
   private def deletePredicateSql(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Option[String] =
     try {
-      val b = new org.apache.spark.sql.connector.util.V2ExpressionSQLBuilder
+      val b = new org.apache.spark.sql.connector.util.V2ExpressionSQLBuilder {
+        override protected def visitLiteral(
+            l: org.apache.spark.sql.connector.expressions.Literal[_]): String =
+          org.apache.spark.sql.catalyst.expressions.Literal(l.value, l.dataType).sql
+      }
       val parts = predicates.map(b.build)
       Some(if (parts.isEmpty) "TRUE" else parts.map(p => s"($p)").mkString(" AND "))
     } catch { case _: Exception => None }
@@ -780,30 +646,13 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
     // whole-snapshot path, whose readAs guards own those semantics.
     val (dataFiles, tombstones, segmented) =
       SnapshotTable.tailEntries(spark, table, latest)
-    val bounds = SnapshotSource.v2BoundsOf(predicates, tableSchema)
-    val probes = SnapshotSource.v2ProbesOf(predicates)
-    val strProbes = SnapshotSource.v2StrProbesOf(predicates)
+    // The predicates prune as V1 filters, the batch scan's form, through
+    // the batch scan's own two-level skipping (zone maps, then blooms).
+    val filters = org.apache.spark.sql.GraftBridge.toV1(predicates)
     if (!segmented && tombstones.isEmpty &&
-        (bounds.nonEmpty || probes.nonEmpty || strProbes.nonEmpty)) {
-      // Two-level skipping, exactly the batch scan's: zone-map bounds
-      // first, then the bloom sidecars for the point probes (the case
-      // zone maps cannot prune when every file spans the domain) —
-      // integer and string keys alike.
-      val longAdmitted = probes.foldLeft(
-          SnapshotTable.admittedFiles(spark, table, latest, bounds)) {
-        case (files, (c, vs)) =>
-          if (vs.isEmpty) Seq.empty
-          else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-            SnapshotTable.bloomAdmittedFiles(spark, table, c, vs, files)
-          else files
-      }
-      val affected = strProbes.foldLeft(longAdmitted) {
-        case (files, (c, vs)) =>
-          if (vs.isEmpty) Seq.empty
-          else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-            SnapshotTable.bloomAdmittedFilesRendered(spark, table, c, vs, files)
-          else files
-      }
+        filters.exists(SnapshotSource.pushable(_, tableSchema))) {
+      val affected =
+        SnapshotSource.admit(spark, table, latest, filters, tableSchema)
       val untouched = dataFiles.distinct.toSet -- affected
       if (untouched.nonEmpty) {
         val gen = latest + 1
@@ -1037,9 +886,7 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
         // record the refusal HERE so the entry always reflects the
         // most recent statement that planned this table.
         if (sawFilters) SnapshotSource.recordCountPushdown(table, served = false)
-        pushed = filters.filter(f => SnapshotSource.boundOf(f,
-          c => tableSchema.fields.find(_.name == c).map(_.dataType)).isDefined ||
-          SnapshotSource.strProbesOf(Array(f)).nonEmpty)
+        pushed = filters.filter(SnapshotSource.pushable(_, tableSchema))
         filters
       }
       override def pushedFilters(): Array[Filter] = pushed
@@ -1253,18 +1100,14 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
         override def filter(
             predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
             : Unit =
-          batch.applyRuntimeFilters(predicates, tableSchema)
+          batch.applyRuntimeFilters(predicates)
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new SnapshotMicroBatchStream(table, required, skipRewrites,
             maxGensPerBatch, maxFilesPerBatch, maxBytesPerBatch,
             startingGeneration, startingTimestamp,
             SnapshotSource.aliasMapOf(tableSchema))
-        private val batch = new SnapshotBatch(table, required, generation,
-          SnapshotSource.boundsOf(pushed, tableSchema),
-          SnapshotSource.probesOf(pushed),
-          SnapshotSource.strProbesOf(pushed),
-          SnapshotSource.aliasMapOf(tableSchema),
-          limitFiles, topNSpec, pushed)
+        private val batch = new SnapshotBatch(table, required, tableSchema,
+          generation, pushed, limitFiles, topNSpec)
         override def toBatch: Batch = batch
         // POST-PRUNING size estimate, served from the MANIFEST's
         // recorded per-file stats (one manifest read covers every
@@ -1326,48 +1169,31 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
   * resolution inside the value-oracle gate (`src_connector_read`).
   */
 private[streaming] class SnapshotBatch(table: String, schema: StructType,
+    tableSchema: StructType,
     generation: Option[Long],
-    bounds: Map[String, (Long, Long)] = Map.empty,
-    probes: Map[String, Seq[Long]] = Map.empty,
-    strProbes: Map[String, Seq[String]] = Map.empty,
-    aliases: Map[String, Seq[String]] = Map.empty,
+    filters: Array[Filter] = Array.empty,
     limit: Option[Int] = None,
-    topN: Option[(String, Boolean, Int)] = None,
-    filters: Array[Filter] = Array.empty) extends Batch {
+    topN: Option[(String, Boolean, Int)] = None) extends Batch {
 
-  // RUNTIME filters (SupportsRuntimeV2Filtering): bounds/probes derived
-  // from a join's build side AFTER it executes, intersected with the
-  // compile-time pushdown before planning. Sound for the same reason
-  // the static filters are: both only SKIP files their conjunct proves
-  // row-free, and Spark still evaluates the join itself row-level.
-  @volatile private var rtBounds: Map[String, (Long, Long)] = Map.empty
-  @volatile private var rtProbes: Map[String, Seq[Long]] = Map.empty
-  @volatile private var rtStrProbes: Map[String, Seq[String]] = Map.empty
+  protected val aliases: Map[String, Seq[String]] =
+    SnapshotSource.aliasMapOf(tableSchema)
+
+  // RUNTIME filters (SupportsRuntimeV2Filtering): a join's build-side
+  // keys, known only AFTER it executes, converted to V1 once here and
+  // conjoined with the compile-time `filters` before planning. Sound
+  // for the same reason the static filters are: both only SKIP files
+  // their conjunct proves row-free, and Spark still evaluates the join
+  // itself row-level.
   @volatile private var rtFilters: Array[Filter] = Array.empty
 
   private[streaming] def applyRuntimeFilters(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate],
-      tableSchema: StructType): Unit = {
-    rtBounds = SnapshotSource.v2BoundsOf(predicates, tableSchema)
-    rtProbes = SnapshotSource.v2ProbesOf(predicates)
-    rtStrProbes = SnapshotSource.v2StrProbesOf(predicates)
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
+      : Unit =
     rtFilters = org.apache.spark.sql.GraftBridge.toV1(predicates)
-  }
 
-  private def mergedBounds: Map[String, (Long, Long)] =
-    (bounds.toSeq ++ rtBounds.toSeq).groupBy(_._1).map { case (c, bs) =>
-      c -> ((bs.map(_._2._1).max, bs.map(_._2._2).min))
-    }
-
-  private def mergedProbes: Map[String, Seq[Long]] =
-    (probes.toSeq ++ rtProbes.toSeq).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
-
-  private def mergedStrProbes: Map[String, Seq[String]] =
-    (strProbes.toSeq ++ rtStrProbes.toSeq).groupBy(_._1).map { case (c, gs) =>
-      c -> gs.map(_._2.distinct).reduce(_ intersect _)
-    }
+  /** Whether a runtime filter yielded a bound or a probe. */
+  private def runtimePrunes: Boolean =
+    rtFilters.exists(SnapshotSource.pushable(_, tableSchema))
 
   /** STORAGE-PARTITIONED-JOIN grouping: `(column, int-width, value →
     * files)` when this scan can be served as one input partition per
@@ -1388,8 +1214,7 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       // the reported partitioning anyway, and a pristine scan should
       // keep one partition PER FILE — collapsing to one-per-value
       // would cap parallelism at the value count for no benefit.
-      if (bounds.nonEmpty || probes.nonEmpty || strProbes.nonEmpty ||
-          limit.isDefined || topN.isDefined ||
+      if (filters.nonEmpty || limit.isDefined || topN.isDefined ||
           !spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false")
             .toBoolean) None
       else {
@@ -1499,41 +1324,19 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
         s"generation $gen of $table carries merge-on-read tombstones; a " +
           "file-level batch scan would return deleted rows - read it via " +
           "SnapshotTable.readMor, or materialize the generation first")
-    // Two-level file skipping: zone-map bounds first, then the
-    // file-level BLOOM sidecars for equality/IN probes on indexed
-    // columns — the axis zone maps cannot prune when every file spans
-    // the column's domain. Both are best-effort (absent index or
-    // unindexed file admits conservatively) and every filter is also
-    // a residual, so correctness never rests on either index. An
-    // unsatisfiable probe conjunction (empty intersection) plans zero
-    // files outright.
-    val longAdmitted = mergedProbes.foldLeft(
-        SnapshotTable.admittedFiles(spark, table, gen, mergedBounds)) {
-      case (files, (c, vs)) =>
-        if (vs.isEmpty) Seq.empty
-        else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-          SnapshotTable.bloomAdmittedFiles(spark, table, c, vs, files)
-        else files
-    }
-    // STRING point probes ride the same sidecars (the build hashes
-    // k.cast("string"), identity on string columns) — membership-only:
-    // strings never range-prune, so their only admission test is here.
-    val strAdmitted = mergedStrProbes.foldLeft(longAdmitted) {
-      case (files, (c, vs)) =>
-        if (vs.isEmpty) Seq.empty
-        else if (files.nonEmpty && SnapshotTable.hasBloomIndex(spark, table, c))
-          SnapshotTable.bloomAdmittedFilesRendered(spark, table, c, vs, files)
-        else files
-    }
+    // Two-level file skipping over the compile-time and runtime
+    // filters together ([[SnapshotSource.admit]]): per column, bounds
+    // intersect and probe sets intersect.
+    val pruned = SnapshotSource.admit(spark, table, gen,
+      filters ++ rtFilters, tableSchema)
     // PUSHED-TOPN file exclusion (mutually exclusive with a pushed
     // bare limit — Spark offers one or the other): drop files whose
     // every row provably sorts after the n-th. Same runtime-filter
     // guard as the limit truncation below.
     val topAdmitted = topN match {
-      case Some((c, desc, n)) if rtBounds.isEmpty && rtProbes.isEmpty &&
-          rtStrProbes.isEmpty =>
-        SnapshotTable.topNAdmitted(spark, table, gen, c, desc, n, strAdmitted)
-      case _ => strAdmitted
+      case Some((c, desc, n)) if !runtimePrunes =>
+        SnapshotTable.topNAdmitted(spark, table, gen, c, desc, n, pruned)
+      case _ => pruned
     }
     // PUSHED-LIMIT truncation: plan only enough files (by recorded row
     // counts) to cover the limit. Sound because the pushdown is
@@ -1545,8 +1348,7 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
     // somehow appear, planning everything is the safe direction) or
     // any admitted file lacks a recorded count.
     val admitted = limit match {
-      case Some(n) if rtBounds.isEmpty && rtProbes.isEmpty &&
-          rtStrProbes.isEmpty && topAdmitted.nonEmpty =>
+      case Some(n) if !runtimePrunes && topAdmitted.nonEmpty =>
         val rec = SnapshotTable.recordedFileStats(spark, table, gen)
         val counts = topAdmitted.map(f => rec.get(f).flatMap(_._1))
         if (counts.forall(_.isDefined)) {
@@ -1560,8 +1362,7 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       case _ => topAdmitted
     }
     if (record)
-      SnapshotSource.recordPlan(table, admitted.size,
-        rtBounds.nonEmpty || rtProbes.nonEmpty || rtStrProbes.nonEmpty)
+      SnapshotSource.recordPlan(table, admitted.size, runtimePrunes)
     (gen, admitted, false)
   }
 
@@ -1579,11 +1380,12 @@ private[streaming] class SnapshotBatch(table: String, schema: StructType,
       resolvePlan()._2.map(SnapshotFilePartition(_)).toArray
   }
 
-  // The factory carries the compile-time and runtime filters so Spark's
-  // parquet reader extends the same pruning one level deeper: row
-  // groups inside admitted files.
+  // The factory carries the compile-time filters so Spark's parquet
+  // reader extends the same pruning one level deeper: row groups inside
+  // admitted files. Runtime filters prune files only: BatchScanExec
+  // builds the factory at planning, before filter() lands.
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(schema, filters ++ rtFilters, aliases)
+    new SnapshotReaderFactory(schema, filters, aliases)
 }
 
 /** Offset state. `pos == 0`: the consumer holds the full content of
@@ -2383,9 +2185,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters.filter(f => SnapshotSource.boundOf(f,
-          c => tableSchema.fields.find(_.name == c).map(_.dataType)).isDefined ||
-          SnapshotSource.strProbesOf(Array(f)).nonEmpty)
+        pushed = filters.filter(SnapshotSource.pushable(_, tableSchema))
         filters
       }
       override def pushedFilters(): Array[Filter] = pushed
@@ -2405,11 +2205,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
       override def build(): Scan = new Scan
           with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
         private val batch =
-          new SnapshotBatch(table, required, None,
-              SnapshotSource.boundsOf(pushed, tableSchema),
-              SnapshotSource.probesOf(pushed),
-              SnapshotSource.strProbesOf(pushed),
-              SnapshotSource.aliasMapOf(tableSchema)) {
+          new SnapshotBatch(table, required, tableSchema, None, pushed) {
             override def planInputPartitions(): Array[InputPartition] = {
               val (gen, files, segmented) = resolvePlan()
               record(RowLevelScanState(gen, files.toSet, segmented))
@@ -2425,8 +2221,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
             // files carry verbatim at commit; sub-file pruning has no
             // such carry.
             override def createReaderFactory(): PartitionReaderFactory =
-              new SnapshotReaderFactory(required,
-                aliases = SnapshotSource.aliasMapOf(tableSchema))
+              new SnapshotReaderFactory(required, aliases = aliases)
           }
         override def readSchema(): StructType = required
         override def description(): String = s"SnapshotRowLevelScan($table)"
@@ -2438,7 +2233,7 @@ private[streaming] class SnapshotRowLevelOperation(table: String,
         override def filter(
             predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
             : Unit =
-          batch.applyRuntimeFilters(predicates, tableSchema)
+          batch.applyRuntimeFilters(predicates)
         override def toBatch: Batch = batch
       }
     }

@@ -33,14 +33,22 @@ object GraftBridge {
   def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
     a.merge(b, internal.SQLConf.get.caseSensitiveAnalysis)
 
-  /** V2 predicates as the V1 filters Spark's file readers push into
-    * parquet (`PredicateUtils` is `private[sql]`). A predicate the
-    * converter cannot read drops — it expects the `And`/`Or`/`Not`
-    * classes, not a generic `Predicate` named "AND" — which only loses
+  /** V2 predicates as V1 filters (`PredicateUtils` is `private[sql]`).
+    * Conjunctions split by NAME first: the converter reads only the
+    * typed `And` class, so a generic `Predicate("AND", ...)` would drop
+    * whole instead of losing just its untranslatable conjuncts. A
+    * predicate the converter cannot read drops, which only loses
     * pruning.
     */
   def toV1(predicates: Array[connector.expressions.filter.Predicate])
-      : Array[sources.Filter] =
-    predicates.flatMap(p => scala.util.Try(
+      : Array[sources.Filter] = {
+    def conjuncts(p: connector.expressions.filter.Predicate)
+        : Seq[connector.expressions.filter.Predicate] =
+      if (p.name == "AND") p.children.toSeq.flatMap {
+        case q: connector.expressions.filter.Predicate => conjuncts(q)
+        case _ => Nil
+      } else Seq(p)
+    predicates.flatMap(conjuncts).flatMap(p => scala.util.Try(
       internal.connector.PredicateUtils.toV1(p)).toOption.flatten)
+  }
 }

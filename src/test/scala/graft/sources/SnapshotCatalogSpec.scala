@@ -188,6 +188,90 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     assert(r.getLong(1) === (0L until 200L).sum - 42L)
   }
 
+  /** The bloom DELETE fixture keyed by a DATE: two files with
+    * interleaved keys (both span the whole range, so zone maps admit
+    * everything) and a bloom sidecar on `d = 2024-01-01 + k days`.
+    */
+  private def dateBloomTable(name: String): String = {
+    import spark.implicits._
+    val t = s"$warehouse/$name"
+    def writeOne(ks: Seq[Long], part: String): String = {
+      val dir = s"$t/data/gen=1/$part"
+      ks.map(k => (k, k * 2)).toDF("k", "v")
+        .withColumn("d", expr("date_add(DATE '2024-01-01', CAST(k AS INT))"))
+        .repartition(1).write.parquet(dir)
+      spark.read.parquet(dir).inputFiles.head
+    }
+    val fa = writeOne(0L until 200L by 2, "a")
+    val fb = writeOne(1L until 200L by 2, "b")
+    SnapshotTable.publish(spark, t, 1L, Seq(fa, fb))
+    SnapshotTable.writeBloomIndex(spark, t, "d", Seq(fa, fb))
+    t
+  }
+
+  /** `2024-01-01 + k days` as a SQL DATE literal. */
+  private def dayOf(k: Long): String =
+    s"DATE '${java.time.LocalDate.of(2024, 1, 1).plusDays(k)}'"
+
+  test("SQL DELETE on a bloom-indexed DATE column removes exactly its row") {
+    dateBloomTable("t_date_bloom_del")
+    spark.sql(s"DELETE FROM spec_cat.t_date_bloom_del WHERE d = ${dayOf(42)}")
+    val r = spark.sql(
+      "SELECT count(*), sum(k) FROM spec_cat.t_date_bloom_del").head()
+    assert(r.getLong(0) === 199L && r.getLong(1) === (0L until 200L).sum - 42L)
+    assert(spark.sql(s"SELECT count(*) FROM spec_cat.t_date_bloom_del " +
+      s"WHERE d = ${dayOf(42)}").head().getLong(0) === 0L)
+  }
+
+  test("MATCHED-only MERGE on a bloom-indexed DATE key updates its row") {
+    dateBloomTable("t_date_bloom_merge")
+    spark.sql(s"SELECT ${dayOf(42)} AS d, 777L AS nv")
+      .createOrReplaceTempView("spec_date_merge_src")
+    spark.sql(
+      """MERGE INTO spec_cat.t_date_bloom_merge t USING spec_date_merge_src s
+        |ON t.d = s.d WHEN MATCHED THEN UPDATE SET v = s.nv""".stripMargin)
+    assert(spark.sql("SELECT v FROM spec_cat.t_date_bloom_merge WHERE k = 42")
+      .head().getLong(0) === 777L)
+    val r = spark.sql(
+      "SELECT count(*), sum(v) FROM spec_cat.t_date_bloom_merge").head()
+    assert(r.getLong(0) === 200L &&
+      r.getLong(1) === (0L until 200L).map(_ * 2).sum - 84L + 777L)
+  }
+
+  test("typed range DELETEs prune by zone maps: DATE, DECIMAL, TIMESTAMP_NTZ") {
+    import spark.implicits._
+    // (table, column expression over k, SQL literal equal to it at k = 150)
+    val ntz150 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusHours(150)
+      .toString.replace('T', ' ')
+    Seq(
+      ("t_del_date", "date_add(DATE '2024-01-01', CAST(k AS INT))", dayOf(150)),
+      ("t_del_dec", "CAST(k * 0.25 AS DECIMAL(10,2))", "37.50"),
+      ("t_del_ntz", "CAST(DATE '2024-01-01' AS TIMESTAMP_NTZ) + " +
+        "make_dt_interval(0, CAST(k AS INT), 0, 0)", s"TIMESTAMP_NTZ '$ntz150'")
+    ).foreach { case (name, x, at150) =>
+      val t = s"$warehouse/$name"
+      def writeOne(range: Range, part: String): String = {
+        val dir = s"$t/data/gen=1/$part"
+        range.map(_.toLong).toDF("k").withColumn("x", expr(x))
+          .repartition(1).write.parquet(dir)
+        spark.read.parquet(dir).inputFiles.head
+      }
+      val fa = writeOne(0 until 100, "a")
+      val fb = writeOne(100 until 200, "b")
+      SnapshotTable.publishStats(spark, t, 1L,
+        SnapshotTable.footerStats(spark, Seq(fa, fb), Seq("x")))
+
+      spark.sql(s"DELETE FROM spec_cat.$name WHERE x >= $at150")
+
+      val r = spark.sql(s"SELECT count(*), sum(k) FROM spec_cat.$name").head()
+      assert(r.getLong(0) === 150L && r.getLong(1) === (0L until 150L).sum,
+        s"$name: content after DELETE")
+      val files2 = SnapshotTable.listFiles(spark, t, 2L).toSet
+      assert(files2.contains(fa), s"$name: the zone-disjoint file must carry by path")
+      assert(!files2.contains(fb), s"$name: the admitted file must be rewritten")
+    }
+  }
+
   test("SQL UPDATE and MERGE rewrite copy-on-write with actions recorded") {
     import spark.implicits._
     val t = s"$warehouse/t_dml"
