@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 /** Pure-Spark snapshot-isolated table maintenance — the manifest layer
   * that ties the engine's existing maintenance ops (compaction, CDC
@@ -75,9 +79,9 @@ object SnapshotTable {
   }
 
   /** One manifest row in any of the manifest forms: plain `(path)`,
-    * merge-on-read `(path, kind)`, single-column zone map
-    * `(path, min_key, max_key)`, multi-column zone map
-    * `(path, key_col, min_key, max_key)`, plus an optional `seq` —
+    * merge-on-read `(path, kind)`, zone map
+    * `(path, key_col, min_key, max_key)` (one row per file and
+    * recorded column), plus an optional `seq` —
     * the Iceberg-style DATA SEQUENCE NUMBER that scopes equality
     * deletes: a `seq`-stamped tombstone applies only to data entries
     * with a STRICTLY SMALLER seq ([[commitUpsert]]), while a legacy
@@ -316,7 +320,7 @@ object SnapshotTable {
       try {
         val cols = bloomColumns(spark, table)
         if (cols.nonEmpty) {
-          val schema = spark.read.parquet(fresh: _*).schema.fieldNames.toSet
+          val schema = fileSchema(spark, fresh).fieldNames.toSet
           cols.filter(schema.contains)
             .foreach(c => writeBloomIndex(spark, table, c, fresh, append = true))
         }
@@ -332,14 +336,7 @@ object SnapshotTable {
     // fresh files with the point zone row the routing guarantees, so
     // pruning and key-grouped joins keep working across maintenance.
     val freshRows = freshPartition match {
-      case Some((c, v)) =>
-        val metaMap = fileMeta(spark, fresh.sorted)
-          .map(m => m._1 -> ((m._2, m._3))).toMap
-        fresh.sorted.map { p =>
-          val (n, b) = metaMap(p)
-          ManifestRow(p, keyCol = Some(c), minKey = Some(v), maxKey = Some(v),
-            nRows = Some(n), bytes = Some(b), nNulls = Some(0L))
-        }
+      case Some((c, v)) => partitionRows(spark, c, fresh.map(_ -> Some(v)))
       case None => metaRows(spark, fresh, selfWritten = true)
     }
     writeManifest(spark, table, gen, replace = false,
@@ -397,22 +394,24 @@ object SnapshotTable {
   def publishPartitionedFiles(spark: SparkSession, table: String, gen: Long,
       partCol: String, files: Seq[(String, Option[Long])],
       carryFrom: Option[Long], action: String = "append",
-      replace: Boolean = false): Unit = {
-    val metaMap = fileMeta(spark, files.map(_._1).sorted)
-      .map(m => m._1 -> ((m._2, m._3))).toMap
-    val rows = files.sortBy(_._1).map { case (p, v) =>
-      val (n, b) = metaMap(p)
-      v match {
-        case Some(x) => ManifestRow(p, keyCol = Some(partCol),
-          minKey = Some(x), maxKey = Some(x),
-          // Routing guarantees the partition column non-null in this
-          // file (null partitions land as plain rows).
-          nRows = Some(n), bytes = Some(b), nNulls = Some(0L))
-        case None => ManifestRow(p, nRows = Some(n), bytes = Some(b))
-      }
+      replace: Boolean = false): Unit =
+    publishAppendRows(spark, table, gen, partitionRows(spark, partCol, files),
+      carryFrom, replace, action = action, statFresh = false)
+
+  /** Self-written manifest rows (sorted by path) for partition-routed
+    * files: a file with a routed value gets the `min = max = value`
+    * zone row on `partCol`, a null-partition file a plain row.
+    */
+  private def partitionRows(spark: SparkSession, partCol: String,
+      files: Seq[(String, Option[Long])]): Seq[ManifestRow] = {
+    val value = files.toMap
+    metaRows(spark, files.map(_._1), selfWritten = true).map { r =>
+      value(r.path).fold(r)(v => r.copy(keyCol = Some(partCol),
+        minKey = Some(v), maxKey = Some(v),
+        // Routing guarantees the partition column non-null in this
+        // file (null partitions land as plain rows).
+        nNulls = Some(0L)))
     }
-    publishAppendRows(spark, table, gen, rows, carryFrom, replace,
-      action = action, statFresh = false)
   }
 
   /** The ACTION generation `gen` was committed with ("append",
@@ -514,8 +513,8 @@ object SnapshotTable {
     writeManifest(spark, table, gen, replace,
       metaRows(spark, paths), Some(action))
 
-  /** Shared staged-rename manifest writer for [[publish]] and
-    * [[publishWithStats]]. Every generation manifest is stamped with
+  /** Shared staged-rename manifest writer for every generation
+    * commit. Every generation manifest is stamped with
     * its commit wall-clock, MONOTONICIZED against the lineage's
     * youngest earlier stamp (`max(now, prev + 1)` — Delta's
     * in-commit-timestamp posture): two commits landing within one
@@ -889,7 +888,7 @@ object SnapshotTable {
     * at O(new files) commit cost.
     */
   def readSegmented(spark: SparkSession, table: String, gen: Long): DataFrame =
-    spark.read.parquet(resolvedFiles(spark, table, gen): _*)
+    readFiles(spark, resolvedFiles(spark, table, gen))
 
   /** Row count of one generation's OWN manifest (the O(batch)-commit
     * evidence the segments query value-gates).
@@ -1003,17 +1002,12 @@ object SnapshotTable {
     // batch would both survive forever. Refuse before publishing —
     // footer row counts are driver-side metadata (no Spark job): batch
     // rows == distinct keys iff the batch is key-unique.
-    val dataMeta = metaRows(spark, freshData, kind = Some("data"),
-      seq = Some(gen))
-    val delMeta = metaRows(spark, freshDels, kind = Some("delete"),
-      seq = Some(gen))
-    // metaRows is best-effort for foreign paths, but THESE files were
-    // written by this very commit: a missing footer count here is
-    // corruption, and letting it slip would silently void the
+    // Self-written: a missing footer count would silently void the
     // key-uniqueness guard below (sums over None-dropped rows).
-    require((dataMeta ++ delMeta).forall(_.nRows.isDefined),
-      s"commitUpsert for $table gen=$gen staged a file with an unreadable " +
-        "footer; refusing to publish")
+    val dataMeta = metaRows(spark, freshData, kind = Some("data"),
+      seq = Some(gen), selfWritten = true)
+    val delMeta = metaRows(spark, freshDels, kind = Some("delete"),
+      seq = Some(gen), selfWritten = true)
     val batchRows = dataMeta.flatMap(_.nRows).sum
     val keyRows = delMeta.flatMap(_.nRows).sum
     require(batchRows == keyRows,
@@ -1075,19 +1069,20 @@ object SnapshotTable {
         case (s, rs) =>
           val applicable = delRows
             .filter(d => d.seq.forall(_ > s)).map(_.path).distinct.sorted
-          // mergeSchema per class + by-name union with missing columns
-          // allowed: a seq-scoped lineage can EVOLVE (an upsert batch
-          // or a later append adds a column), so neither the files of
-          // one class nor the classes themselves are guaranteed to
-          // share a schema — absent columns read back as NULL, the
-          // same contract as [[readAsMerged]] and the connector.
+          // Footer-union schema per class + by-name union with missing
+          // columns allowed: a seq-scoped lineage can EVOLVE (an upsert
+          // batch or a later append adds a column), so neither the
+          // files of one class nor the classes themselves are
+          // guaranteed to share a schema — absent columns read back as
+          // NULL, the same contract as [[readAsMerged]] and the
+          // connector.
           val clsFiles = rs.map(_.path).distinct.sorted
           val data = spark.read
             .schema(mergedFooterSchema(spark, clsFiles))
             .parquet(clsFiles: _*)
           if (applicable.isEmpty) data
           else data.join(
-            spark.read.parquet(applicable: _*)
+            readFiles(spark, applicable)
               .select(org.apache.spark.sql.functions.col(keyCol)).distinct(),
             Seq(keyCol), "left_anti")
       }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1099,15 +1094,26 @@ object SnapshotTable {
     * time travel hold by construction — later generations' files are
     * invisible because they were never handed to the reader.
     */
-  def readAs(spark: SparkSession, table: String, gen: Long): DataFrame = {
-    val files = listFiles(spark, table, gen)
-    // Schema from the first file's cached footer (the plain-read
-    // contract: homogeneous lineages; evolved ones use readAsMerged)
-    // instead of re-inferring per call.
-    if (files.isEmpty) spark.read.parquet(files: _*)
-    else spark.read.schema(mergedFooterSchema(spark, files.take(1)))
-      .parquet(files: _*)
-  }
+  def readAs(spark: SparkSession, table: String, gen: Long): DataFrame =
+    readFiles(spark, listFiles(spark, table, gen))
+
+  /** Read manifest-listed `files` with [[fileSchema]] — the plain-read
+    * contract (homogeneous files; evolved lineages use
+    * [[readAsMerged]]) at the price of one cached footer read instead
+    * of a schema-inference job per call. No files keeps Spark's own
+    * "unable to infer schema" error.
+    */
+  private def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.read.parquet()
+    else spark.read.schema(fileSchema(spark, files)).parquet(files: _*)
+
+  /** The schema Spark's inference gives `files` without mergeSchema:
+    * the footer schema of the first file in path order
+    * (`ParquetUtils.splitFiles` sorts by path before picking one).
+    */
+  private def fileSchema(spark: SparkSession,
+      files: Seq[String]): org.apache.spark.sql.types.StructType =
+    mergedFooterSchema(spark, Seq(files.min))
 
   /** [[readAs]] for a generation whose files carry EVOLVED schemas:
     * `mergeSchema` unions every file footer's fields (metadata reads,
@@ -1257,7 +1263,7 @@ object SnapshotTable {
     * can see yet.
     */
   def readStaged(spark: SparkSession, table: String, branch: String): DataFrame =
-    spark.read.parquet(stagedFiles(spark, table, branch): _*)
+    readFiles(spark, stagedFiles(spark, table, branch))
 
   /** PUBLISH half: fast-forward the audited branch into the generation
     * lineage as `gen` — the staged files enter the manifest BY
@@ -1306,30 +1312,6 @@ object SnapshotTable {
     }
   }
 
-  /** Per-file min/max of a BIGINT column, read from the parquet
-    * FOOTERS — no data pages touched (the [[SourceOps.compactTo]]
-    * footer-read pattern). This is the zone-map every columnar writer
-    * already produced for free; recording it in the manifest is what
-    * turns the manifest into a data-skipping index.
-    */
-  def footerKeyStats(spark: SparkSession, paths: Seq[String],
-      column: String): Seq[(String, Long, Long)] =
-    footerStats(spark, paths, Seq(column)).map { case (f, _, mn, mx) => (f, mn, mx) }
-
-  /** Per-file min/max of SEVERAL BIGINT columns in one footer pass —
-    * one `(path, column, min, max)` row per (file, column). The
-    * multi-column generalization [[publishStats]] records, giving the
-    * manifest a zone map per dimension (a Z-ORDERed layout makes every
-    * recorded dimension's per-file bounds tight at once).
-    */
-  /** Order-preserving parallel map for the per-file footer reads the
-    * commit/analyze paths run on the driver: each read is a short
-    * blocking metadata I/O (~5-15 ms open + footer parse), and the
-    * sequential loop made every commit O(files) × that latency — the
-    * exact driver bottleneck guide §5 warns about. Common-pool
-    * parallelism keeps wall time ~files/threads while the work stays
-    * metadata-plane (footers only, never data pages).
-    */
   /** Dedicated bounded pool for [[parFiles]]: blocking footer I/O on
     * the JVM COMMON ForkJoinPool would starve every other common-pool
     * user in the driver behind a slow filesystem. Daemon threads, so
@@ -1344,10 +1326,16 @@ object SnapshotTable {
     })
   }
 
+  /** Order-preserving parallel map for the per-file footer reads the
+    * commit/analyze paths run on the driver: each read is a short
+    * blocking metadata I/O (~5-15 ms open + footer parse), and a
+    * sequential loop makes every commit O(files) × that latency.
+    * Pool parallelism keeps wall time ~files/threads while the work
+    * stays metadata-plane (footers only, never data pages).
+    */
   private def parFiles[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)
     else {
-      import scala.jdk.CollectionConverters._
       // Order-preserving: futures submit in xs order and join in order.
       // Exceptions from f rethrow as the ORIGINAL exception type (the
       // ExecutionException unwraps), preserving the sequential loop's
@@ -1362,47 +1350,88 @@ object SnapshotTable {
       }
     }
 
-  def footerStats(spark: SparkSession, paths: Seq[String],
-      columns: Seq[String]): Seq[(String, String, Long, Long)] = {
+  /** THE driver-side footer reader of the snapshot layer: each file's
+    * parquet metadata plus its on-disk length, in `paths` order, from
+    * ONE open per file on [[footerPool]] — footers only, never data
+    * pages, and no Spark job. Every driver-side metadata read
+    * ([[footerStats]], [[fileMeta]], manifest stamping,
+    * [[mergedFooterSchema]]) derives from it. An unreadable file is a
+    * `Failure`: strict consumers rethrow it with `get`, best-effort
+    * ones record nothing for it.
+    */
+  private[sources] def footers(spark: SparkSession, paths: Seq[String])
+      : Seq[(String, Try[(ParquetMetadata, Long)])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     parFiles(paths) { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = r.getFooter.getBlocks.asScala
-        // Zero-row files (a slice writer can legitimately emit a
-        // schema-only part file for an empty key range) carry no row
-        // groups and therefore no statistics: they are DROPPED, not an
-        // error — an empty file can never match a range query, so a
-        // stats manifest that omits it prunes it for free.
-        if (blocks.isEmpty) Seq.empty
-        else columns.map { column =>
-          val stats = blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == column)
-              .getOrElse(sys.error(s"no column $column in footer of $f"))
-              .getStatistics
-          }
-          require(stats.forall(s => s.hasNonNullValue),
-            s"footer of $f carries no $column statistics")
-          // INT64 and INT32 physical columns both record: BIGINT stats
-          // arrive as Long, INT/DATE (and narrow-decimal) as Integer —
-          // the zone-map domain is the physical long either way.
-          def asLong(x: Any): Long = x match {
-            case l: java.lang.Long => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case other => sys.error(
-              s"column $column of $f has non-integer statistics " +
-                s"(${other.getClass.getSimpleName}); zone maps record " +
-                "integer-physical columns only")
-          }
-          (f, column,
-            stats.map(s => asLong(s.genericGetMin)).min,
-            stats.map(s => asLong(s.genericGetMax)).max)
-        }
-      } finally r.close()
-    }.flatten
+      f -> Try {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try (r.getFooter, in.getLength) finally r.close()
+      }
+    }
+  }
+
+  /** Per-file min/max of SEVERAL integer-physical columns in one
+    * footer pass — one `(path, column, min, max)` row per (file,
+    * column), no data pages touched. This is the zone map every
+    * columnar writer already produced for free; [[publishStats]]
+    * records it, giving the manifest a zone map per dimension (a
+    * Z-ORDERed layout makes every recorded dimension's per-file bounds
+    * tight at once).
+    */
+  def footerStats(spark: SparkSession, paths: Seq[String],
+      columns: Seq[String]): Seq[(String, String, Long, Long)] =
+    footers(spark, paths).flatMap { case (f, t) => zoneRows(f, t.get._1, columns) }
+
+  private def zoneRows(f: String, meta: ParquetMetadata,
+      columns: Seq[String]): Seq[(String, String, Long, Long)] = {
+    val blocks = meta.getBlocks.asScala
+    // Zero-row files (a slice writer can legitimately emit a
+    // schema-only part file for an empty key range) carry no row
+    // groups and therefore no statistics: they are DROPPED, not an
+    // error — an empty file can never match a range query, so a
+    // stats manifest that omits it prunes it for free.
+    if (blocks.isEmpty) Seq.empty
+    else columns.map { column =>
+      val stats = blocks.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == column)
+          .getOrElse(sys.error(s"no column $column in footer of $f"))
+          .getStatistics
+      }
+      require(stats.forall(s => s.hasNonNullValue),
+        s"footer of $f carries no $column statistics")
+      // INT64 and INT32 physical columns both record: BIGINT stats
+      // arrive as Long, INT/DATE (and narrow-decimal) as Integer —
+      // the zone-map domain is the physical long either way.
+      def asLong(x: Any): Long = x match {
+        case l: java.lang.Long => l.longValue
+        case i: java.lang.Integer => i.longValue
+        case other => sys.error(
+          s"column $column of $f has non-integer statistics " +
+            s"(${other.getClass.getSimpleName}); zone maps record " +
+            "integer-physical columns only")
+      }
+      (f, column,
+        stats.map(s => asLong(s.genericGetMin)).min,
+        stats.map(s => asLong(s.genericGetMax)).max)
+    }
+  }
+
+  /** A footer's row count: the sum of its row groups'. */
+  private def rowCount(meta: ParquetMetadata): Long =
+    meta.getBlocks.asScala.map(_.getRowCount).sum
+
+  /** `column`'s NULL count summed over a footer's row groups; `None`
+    * when any block leaves the statistic unset (legacy writers).
+    */
+  private def nullCount(meta: ParquetMetadata, column: String): Option[Long] = {
+    val per = meta.getBlocks.asScala.map(_.getColumns.asScala
+      .find(_.getPath.toDotString == column)
+      .map(_.getStatistics)
+      .filter(s => s != null && s.isNumNullsSet)
+      .map(_.getNumNulls))
+    if (per.nonEmpty && per.forall(_.isDefined)) Some(per.flatten.sum) else None
   }
 
   /** Per-file ROW COUNTS from the parquet footers — the third
@@ -1415,61 +1444,19 @@ object SnapshotTable {
     fileMeta(spark, paths).map(m => (m._1, m._2))
 
   /** Per-file `(footer row count, on-disk bytes)` — ONE footer open per
-    * file (the input-file handle already carries the size from its
-    * status lookup). This is what every COMMIT stamps into its fresh
-    * manifest rows, so read-side consumers (scan statistics, the
-    * `files` metadata table) answer from the manifest alone at any
-    * file count.
+    * file. This is what every COMMIT stamps into its fresh manifest
+    * rows, so read-side consumers (scan statistics, the `files`
+    * metadata table) answer from the manifest alone at any file count.
     */
   def fileMeta(spark: SparkSession,
-      paths: Seq[String]): Seq[(String, Long, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    parFiles(paths) { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try (f, r.getRecordCount, in.getLength) finally r.close()
+      paths: Seq[String]): Seq[(String, Long, Long)] =
+    footers(spark, paths).map { case (f, t) =>
+      val (meta, bytes) = t.get
+      (f, rowCount(meta), bytes)
     }
-  }
-
-  /** Best-effort footer metadata for the explicit-row publish forms,
-    * ONE footer open per file: `(row count, on-disk bytes, NULL count
-    * per named column)`. Callers hand zone-map rows whose paths the
-    * layer never wrote (a spec's synthetic layout, a foreign file
-    * registered by stats), so an unopenable path records NO meta rather
-    * than failing the publish — the consumers all fall back per file.
-    * A column's NULL count sums its row groups', `None` when any block
-    * leaves the statistic unset (legacy writers).
-    */
-  private def footerMetaOpt(spark: SparkSession,
-      files: Seq[(String, Seq[String])])
-      : Map[String, (Long, Long, Map[String, Option[Long]])] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    parFiles(files) { case (f, cols) =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          import scala.jdk.CollectionConverters._
-          val blocks = r.getFooter.getBlocks.asScala
-          val nulls = cols.map { c =>
-            val per = blocks.map(_.getColumns.asScala
-              .find(_.getPath.toDotString == c)
-              .map(_.getStatistics)
-              .filter(s => s != null && s.isNumNullsSet)
-              .map(_.getNumNulls))
-            c -> (if (per.nonEmpty && per.forall(_.isDefined))
-              Some(per.flatten.sum) else None)
-          }.toMap
-          Seq(f -> ((r.getRecordCount, in.getLength, nulls)))
-        } finally r.close()
-      } catch { case _: Exception => Seq.empty }
-    }.flatten.toMap
-  }
 
   /** [[fileMeta]] as ready-to-publish manifest rows (sorted by path) —
-    * BEST-EFFORT like [[footerMetaOpt]]: the explicit-path publish forms
+    * BEST-EFFORT unless `selfWritten`: the explicit-path publish forms
     * ([[publish]], [[stageFiles]], [[commitDeletes]]) accept paths this
     * layer never wrote (a spec's synthetic layout, a foreign file
     * registered by stats), so an unopenable footer records NO stats
@@ -1479,7 +1466,7 @@ object SnapshotTable {
   private def metaRows(spark: SparkSession, paths: Seq[String],
       kind: Option[String] = None, seq: Option[Long] = None,
       selfWritten: Boolean = false): Seq[ManifestRow] = {
-    val meta = footerMetaOpt(spark, paths.map(_ -> Nil))
+    val read = footers(spark, paths.sorted)
     // SELF-WRITTEN publishes (the connector's own commit/append/rewrite
     // paths — this layer just closed those footers) REQUIRE the stats:
     // a transient footer-read failure silently publishing stat-less
@@ -1487,15 +1474,16 @@ object SnapshotTable {
     // planning statistics for the generation. Foreign/explicit-path
     // publishes keep the best-effort contract.
     if (selfWritten) {
-      val missing = paths.filterNot(meta.contains)
+      val missing = read.collect { case (p, Failure(_)) => p }
       require(missing.isEmpty,
         s"self-written publish could not read footer stats of " +
           s"${missing.take(3).mkString(", ")}${if (missing.size > 3) ", ..." else ""} - " +
           "refusing to commit a stat-less generation (retry the commit)")
     }
-    paths.sorted.map { p =>
+    read.map { case (p, t) =>
       ManifestRow(p, kind = kind, seq = seq,
-        nRows = meta.get(p).map(_._1), bytes = meta.get(p).map(_._2))
+        nRows = t.toOption.map(m => rowCount(m._1)),
+        bytes = t.toOption.map(_._2))
     }
   }
 
@@ -1527,26 +1515,10 @@ object SnapshotTable {
         (p, k, rs.flatMap(_.nRows).headOption, rs.flatMap(_.bytes).headOption)
       }.toSeq.sortBy(r => (r._2, r._1))
 
-  /** Publish generation `gen` with per-file zone-map stats:
-    * manifest rows are (path, min_key, max_key). [[listFiles]] /
-    * [[readAs]] keep working (they project `path` only);
-    * [[readWhere]] prunes by the stats.
-    */
-  def publishWithStats(spark: SparkSession, table: String, gen: Long,
-      rows: Seq[(String, Long, Long)],
-      action: String = "append"): Unit = {
-    val meta = footerMetaOpt(spark, rows.map(_._1).distinct.sorted.map(_ -> Nil))
-    writeManifest(spark, table, gen, replace = false,
-      rows.sortBy(_._1).map { case (p, mn, mx) =>
-        ManifestRow(p, minKey = Some(mn), maxKey = Some(mx),
-          nRows = meta.get(p).map(_._1), bytes = meta.get(p).map(_._2)) },
-      Some(action))
-  }
-
-  /** Publish generation `gen` with MULTI-COLUMN zone maps: manifest
-    * rows are (path, key_col, min_key, max_key) — one row per (file,
-    * recorded column), the long form of [[footerStats]]'s output — so
-    * [[readWhere]] can prune on ANY recorded dimension of the same
+  /** Publish generation `gen` with per-file ZONE MAPS: manifest rows
+    * are (path, key_col, min_key, max_key) — one row per (file,
+    * recorded column), [[footerStats]]'s output — so [[readWhere]] and
+    * [[admittedFiles]] can prune on ANY recorded dimension of the same
     * manifest (the `layout_zorder` story at the manifest layer: a
     * Z-ORDERed file layout keeps every dimension's per-file bounds
     * tight, and this manifest is what turns those bounds into file
@@ -1562,14 +1534,14 @@ object SnapshotTable {
     // before this file" proof the TopN pushdown needs under NULLS LAST
     // orderings. An unreadable footer or unset statistic records None
     // and the file neither proves nor excludes.
-    val meta = footerMetaOpt(spark, rows.groupBy(_._1).toSeq
-      .map { case (p, rs) => p -> rs.map(_._2).distinct })
+    val meta = footers(spark, rows.map(_._1).distinct)
+      .collect { case (p, Success(m)) => p -> m }.toMap
     writeManifest(spark, table, gen, replace = false,
       rows.sortBy(r => (r._1, r._2)).map { case (p, c, mn, mx) =>
         val m = meta.get(p)
         ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
-          nRows = m.map(_._1), bytes = m.map(_._2),
-          nNulls = m.flatMap(_._3.get(c)).flatten) },
+          nRows = m.map(x => rowCount(x._1)), bytes = m.map(_._2),
+          nNulls = m.flatMap(x => nullCount(x._1, c))) },
       Some(action))
   }
 
@@ -1667,7 +1639,7 @@ object SnapshotTable {
   def writeBloomIndex(spark: SparkSession, table: String, column: String,
       files: Seq[String], append: Boolean = false): String = {
     val path = bloomIndexPath(table, column)
-    spark.read.parquet(files: _*)
+    readFiles(spark, files)
       .select(input_file_name().as("f"),
         explode(bloomPositionsCol(col(column))).as("p"))
       .select(col("f"), expr("p div 32").as("word"),
@@ -1897,33 +1869,20 @@ object SnapshotTable {
   def readWhere(spark: SparkSession, table: String, gen: Long,
       column: String, lo: Long, hi: Long): DataFrame = {
     val rows = readManifestRows(spark, manifestPath(table, gen))
-    val paths = (if (rows.exists(_.keyCol.isDefined)) {
-      // Multi-column manifest ([[publishStats]]): admit a file unless
-      // the REQUESTED dimension's zone map excludes it; a file with no
-      // row for the dimension admits conservatively. Refuse a column
-      // the manifest never recorded — an all-admit "prune" on a typo'd
-      // name would silently read the whole table.
-      require(rows.exists(_.keyCol.contains(column)),
-        s"manifest of $table gen $gen records no zone map for $column " +
-          s"(has: ${rows.flatMap(_.keyCol).distinct.sorted.mkString(", ")})")
-      val excluded = rows.collect {
-        case ManifestRow(p, _, Some(c), Some(mn), Some(mx), _, _, _, _)
-            if c == column && (mn > hi || mx < lo) => p
-      }.toSet
-      rows.collect { case r if r.kind.forall(_ == "data") => r.path }
-        .distinct.filterNot(excluded)
-    } else {
-      require(rows.exists(_.minKey.isDefined),
-        s"manifest of $table gen $gen carries no zone-map stats; " +
-          "readWhere needs a publishWithStats/publishStats manifest")
-      // A data row with no recorded stats (e.g. appended after the
-      // stats publish) admits CONSERVATIVELY — pruning may only ever
-      // skip files the bounds PROVE irrelevant.
-      rows.collect {
-        case r if r.kind.forall(_ == "data") &&
-          r.minKey.forall(_ <= hi) && r.maxKey.forall(_ >= lo) => r.path
-      }
-    }).sorted
+    // Admit a file unless the REQUESTED dimension's zone map excludes
+    // it; a data row with no zone row for the dimension (e.g. appended
+    // after the stats publish) admits conservatively. Refuse a column
+    // the manifest never recorded — an all-admit "prune" on a typo'd
+    // name would silently read the whole table.
+    require(rows.exists(_.keyCol.contains(column)),
+      s"manifest of $table gen $gen records no zone map for $column " +
+        s"(has: ${rows.flatMap(_.keyCol).distinct.sorted.mkString(", ")})")
+    val excluded = rows.collect {
+      case ManifestRow(p, _, Some(c), Some(mn), Some(mx), _, _, _, _)
+          if c == column && (mn > hi || mx < lo) => p
+    }.toSet
+    val paths = rows.collect { case r if r.kind.forall(_ == "data") => r.path }
+      .distinct.filterNot(excluded).sorted
     if (paths.isEmpty) {
       // No file admitted: return an EMPTY frame with the table's schema
       // from the FOOTERS of every manifest file (mergeSchema unions
@@ -1938,29 +1897,42 @@ object SnapshotTable {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else
-      spark.read.parquet(paths: _*)
+      readFiles(spark, paths)
         .filter(col(column) >= lo && col(column) <= hi)
   }
 
-  /** The schema `spark.read.option("mergeSchema", true)` would infer
-    * over `files`, computed on the DRIVER: per-file footer schemas
-    * memoized JVM-wide (data files here are immutable — attempt-
-    * private directories, never rewritten in place), folded in file
-    * order with Spark's own `StructType.merge` (same fold
-    * `SchemaMergeUtils.mergeSchemasInParallel` runs). The distributed
-    * footer job the mergeSchema option launches costs ~60-150 ms per
-    * call and schema resolution runs per SQL-statement table load —
-    * at 100 TB the catalog serves this from table metadata anyway.
+  /** Per-file footer schemas, memoized JVM-wide: data files here are
+    * immutable (attempt-private directories, never rewritten in place),
+    * and schema resolution runs per SQL-statement table load.
     */
   private val fileSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]
 
+  /** The schema `spark.read.option("mergeSchema", true)` would infer
+    * over `files`, computed on the DRIVER from their footers: Spark's
+    * own per-footer conversion (`ParquetFileFormat.readSchemaFromFooter`
+    * under the session's parquet settings, nullable like every
+    * file-source schema), folded in file order with Spark's own
+    * `StructType.merge` (the fold `SchemaMergeUtils.mergeSchemasInParallel`
+    * runs). Uncached files are read in one [[footers]] pass; no Spark
+    * job starts, where inferring through `spark.read` schedules one per
+    * call (~70-90 ms each on a 4-core VM).
+    */
   def mergedFooterSchema(spark: SparkSession,
       files: Seq[String]): org.apache.spark.sql.types.StructType = {
     require(files.nonEmpty, "mergedFooterSchema needs at least one file")
-    files.iterator
-      .map(f => fileSchemaCache.computeIfAbsent(f,
-        p => spark.read.parquet(p).schema))
+    val missing = files.distinct.filterNot(fileSchemaCache.containsKey)
+    if (missing.nonEmpty) {
+      import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+      val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      footers(spark, missing).foreach { case (f, t) =>
+        val footer = new org.apache.parquet.hadoop.Footer(
+          new org.apache.hadoop.fs.Path(f), t.get._1)
+        fileSchemaCache.putIfAbsent(f, org.apache.spark.sql.GraftBridge.asNullable(
+          ParquetFileFormat.readSchemaFromFooter(footer, converter)))
+      }
+    }
+    files.iterator.map(fileSchemaCache.get)
       .reduceLeft(org.apache.spark.sql.GraftBridge.mergeSchemas)
   }
 
@@ -2242,17 +2214,18 @@ object SnapshotTable {
     val (data, dels, seg) = tailEntries(spark, table, gen)
     require(dels.isEmpty && !seg,
       s"analyze needs a plain full-carry lineage at $table")
-    val stats = footerStats(spark, data, columns)
-    val nulls = footerMetaOpt(spark, stats.groupBy(_._1).toSeq
-      .map { case (p, rs) => p -> rs.map(_._2).distinct })
     val prev = readManifestRows(spark, manifestPath(table, gen))
     val metaOf: Map[String, (Option[Long], Option[Long])] =
       recordedFileStats(spark, table, gen)
-    val fresh = stats.map { case (p, c, mn, mx) =>
-      ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
-        nRows = metaOf.get(p).flatMap(_._1),
-        bytes = metaOf.get(p).flatMap(_._2),
-        nNulls = nulls.get(p).flatMap(_._3.get(c)).flatten)
+    // Zone rows and NULL counts from the same footer open.
+    val fresh = footers(spark, data).flatMap { case (p, t) =>
+      val meta = t.get._1
+      zoneRows(p, meta, columns).map { case (_, c, mn, mx) =>
+        ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
+          nRows = metaOf.get(p).flatMap(_._1),
+          bytes = metaOf.get(p).flatMap(_._2),
+          nNulls = nullCount(meta, c))
+      }
     }
     val kept = prev.filterNot(_.keyCol.exists(columns.contains))
     writeManifest(spark, table, gen + 1, replace = false,

@@ -231,24 +231,16 @@ object SourceOps {
   def compactTo(spark: SparkSession, inDir: String, outDir: String,
       targetBytes: Long): Int = {
     val df = spark.read.parquet(inDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = df.inputFiles
-    val bytes = files.iterator.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(conf).getFileStatus(p).getLen
-    }.sum
+    // Bytes and rows from the parquet FOOTERS of the files already
+    // listed, one open per file — no Spark job, no data pages read (a
+    // count() would schedule a scan that re-opens every small file, the
+    // very pathology this op repairs).
+    val meta = SnapshotTable.fileMeta(spark, df.inputFiles.toSeq)
+    val bytes = meta.map(_._3).sum
     // Clamp by row count: repartition(n) emits fewer than n files when
     // rows < n, which would break the returned count's "exactly this
-    // many part files" contract on very small inputs. Rows come from
-    // the parquet FOOTERS of the files already listed — no Spark job,
-    // no data pages read (a count() would schedule a scan that re-opens
-    // every small file, the very pathology this op repairs).
-    val rows = files.iterator.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    // many part files" contract on very small inputs.
+    val rows = meta.map(_._2).sum
     val target = math.max(1L, math.min(
       math.ceil(bytes.toDouble / targetBytes).toLong, rows)).toInt
     df.repartition(target).write.mode("overwrite").parquet(outDir)
@@ -805,18 +797,14 @@ object SourceOps {
     val file = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir).head
     SnapshotTable.publishAppend(spark, table, 1L, Seq(file), carryFrom = None)
     val (lo, hi) = (maxKey / 4, maxKey / 2)
-    val conf = spark.sessionState.newHadoopConf()
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), conf))
-    val (total, admitted) =
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = r.getFooter.getBlocks.asScala
-        (blocks.size.toLong, blocks.count(b =>
-          graft.streaming.SnapshotSource.groupAdmits(
-            Map("o_orderkey" -> ((lo, hi))), Map.empty, b)).toLong)
-      } finally r.close()
+    val (total, admitted) = {
+      import scala.jdk.CollectionConverters._
+      val blocks = SnapshotTable.footers(spark, Seq(file)).head._2.get._1
+        .getBlocks.asScala
+      (blocks.size.toLong, blocks.count(b =>
+        graft.streaming.SnapshotSource.groupAdmits(
+          Map("o_orderkey" -> ((lo, hi))), Map.empty, b)).toLong)
+    }
     require(total >= 4,
       s"row-group fixture must span several groups; got $total " +
         "(parquet.block.size not honored?)")
@@ -2781,8 +2769,8 @@ object SourceOps {
     // drop out of the stats — the manifest lists only files that can
     // ever match, which keeps n_files_total equal to the oracle's
     // count of NON-EMPTY slices.
-    val stats = SnapshotTable.footerKeyStats(spark, paths, "o_orderkey")
-    SnapshotTable.publishWithStats(spark, table, 1L, stats)
+    val stats = SnapshotTable.footerStats(spark, paths, Seq("o_orderkey"))
+    SnapshotTable.publishStats(spark, table, 1L, stats)
     val (lo, hi) = (maxKey / 4, maxKey / 2)
     val pruned = SnapshotTable.readWhere(spark, table, 1L, "o_orderkey", lo, hi)
     pruned.agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("key_sum"))
@@ -2860,8 +2848,8 @@ object SourceOps {
         .filter(col("cents") === probe).select(col("o_orderkey"))
     // The zone-map CONTRAST: per-file cents min/max (exactly the
     // parquet footer statistics) admit nearly every file.
-    val centsStats = SnapshotTable.footerKeyStats(spark, paths, "cents")
-    val nZone = centsStats.count { case (_, lo, hi) => lo <= probe && probe <= hi }
+    val centsStats = SnapshotTable.footerStats(spark, paths, Seq("cents"))
+    val nZone = centsStats.count { case (_, _, lo, hi) => lo <= probe && probe <= hi }
     content.agg(count(lit(1)).as("n_rows"), sum("o_orderkey").as("key_sum"))
       .select(lit(paths.size.toLong).as("n_files_total"),
         lit(nZone.toLong).as("n_files_zonemap"),
@@ -3218,8 +3206,8 @@ object SourceOps {
       .repartition(col("s"))
       .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths1 = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
-    SnapshotTable.publishWithStats(spark, table, 1L,
-      SnapshotTable.footerKeyStats(spark, paths1, "o_orderkey"))
+    SnapshotTable.publishStats(spark, table, 1L,
+      SnapshotTable.footerStats(spark, paths1, Seq("o_orderkey")))
     // OPTIMIZE: rewrite into sorted key-range slices (deterministic
     // width, the snapshotSkip slicing — not repartitionByRange, whose
     // sampled boundaries would make file contents run-dependent),
@@ -3232,8 +3220,8 @@ object SourceOps {
       .sortWithinPartitions("o_orderkey")
       .write.partitionBy("s").mode("overwrite").parquet(gen2Dir)
     val paths2 = graft.sources.SnapshotTable.freshFiles(spark, gen2Dir)
-    SnapshotTable.publishWithStats(spark, table, 2L,
-      SnapshotTable.footerKeyStats(spark, paths2, "o_orderkey"),
+    SnapshotTable.publishStats(spark, table, 2L,
+      SnapshotTable.footerStats(spark, paths2, Seq("o_orderkey")),
       action = "optimize")
     val (lo, hi) = (maxKey / 4, maxKey / 2)
     Seq(1L, 2L).map { g =>

@@ -8,32 +8,6 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamDrill {
 
-  /** A conf-isolated session (shared SparkContext, private SQLConf)
-    * with no-data micro-batches DISABLED. Every gated drill emits its
-    * output eagerly per DATA batch (inner interval join, first-seen
-    * dedup, NoTimeout flatMapGroupsWithState, complete-mode
-    * aggregation, stateless CDC apply, index probe-and-append), so the
-    * trailing no-data batch `processAllAvailable` otherwise appends for
-    * watermark housekeeping contributes zero rows while paying a full
-    * micro-batch of state-store instantiation (partitions × store
-    * instances per stateful operator) — at fixture scale a third or
-    * more of the drill's wall time. Production APPEND-mode windowed
-    * aggregations DO need no-data batches to finalize windows after
-    * input stops; they run on the main session, which keeps the
-    * default. The isolation matters because Verify runs registered
-    * queries concurrently: a shared-conf toggle would race.
-    *
-    * Shuffle partitions scope down to 4 for the same reason: every
-    * micro-batch instantiates (partitions × state stores per stateful
-    * operator) HDFS-backed store instances, so at fixture scale 32
-    * partitions is pure per-batch overhead (the stream-stream join
-    * alone spins two legs × four stores per partition per trigger).
-    * The gated outputs are partition-count invariant by construction
-    * (exact decimal sums, set-valued sinks). At production scale the
-    * SAME queries want MANY partitions — state volume per partition is
-    * the sizing rule — which is a deployment conf, not code: nothing
-    * in the drill bodies assumes the count.
-    */
   /** Fresh scratch dirs (leftovers deleted) — the drills rerun within
     * one JVM (Verify then Bench), so every run needs fresh checkpoint
     * and sink lineage. The ONE implementation the drill families share.
@@ -62,6 +36,32 @@ object StreamDrill {
           org.apache.spark.sql.types.StructType.fromDDL(emptyDdl))
     }
 
+  /** A conf-isolated session (shared SparkContext, private SQLConf)
+    * with no-data micro-batches DISABLED. Every gated drill emits its
+    * output eagerly per DATA batch (inner interval join, first-seen
+    * dedup, NoTimeout flatMapGroupsWithState, complete-mode
+    * aggregation, stateless CDC apply, index probe-and-append), so the
+    * trailing no-data batch `processAllAvailable` otherwise appends for
+    * watermark housekeeping contributes zero rows while paying a full
+    * micro-batch of state-store instantiation (partitions × store
+    * instances per stateful operator) — at fixture scale a third or
+    * more of the drill's wall time. Production APPEND-mode windowed
+    * aggregations DO need no-data batches to finalize windows after
+    * input stops; they run on the main session, which keeps the
+    * default. The isolation matters because Verify runs registered
+    * queries concurrently: a shared-conf toggle would race.
+    *
+    * Shuffle partitions scope down to 4 for the same reason: every
+    * micro-batch instantiates (partitions × state stores per stateful
+    * operator) HDFS-backed store instances, so at fixture scale 32
+    * partitions is pure per-batch overhead (the stream-stream join
+    * alone spins two legs × four stores per partition per trigger).
+    * The gated outputs are partition-count invariant by construction
+    * (exact decimal sums, set-valued sinks). At production scale the
+    * SAME queries want MANY partitions — state volume per partition is
+    * the sizing rule — which is a deployment conf, not code: nothing
+    * in the drill bodies assumes the count.
+    */
   def session(spark: SparkSession, noDataBatches: Boolean = false): SparkSession = {
     val s = spark.newSession()
     // Event-time-TIMEOUT drills (stream_sessions) must keep no-data

@@ -33,6 +33,11 @@ object GraftBridge {
   def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
     a.merge(b, internal.SQLConf.get.caseSensitiveAnalysis)
 
+  /** `StructType.asNullable` (`private[spark]`): the nullability every
+    * file-source relation gives its data schema.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** V2 predicates as V1 filters (`PredicateUtils` is `private[sql]`).
     * Conjunctions split by NAME first: the converter reads only the
     * typed `And` class, so a generic `Predicate("AND", ...)` would drop
