@@ -42,41 +42,49 @@ object SnapshotTable {
     s"$table/manifests/gen=$gen"
 
   /** Data files of a freshly-written output directory, listed straight
-    * off the FileSystem and rendered exactly as Spark's
-    * `DataFrame.inputFiles` renders them (URI with explicit empty
-    * authority — `file:///...` — so manifest paths stay
-    * byte-comparable to scan-side file identities). One directory
-    * status call where the old `spark.read.parquet(dir).inputFiles`
-    * idiom paid a full schema inference + InMemoryFileIndex build
-    * (~70 ms on the fixture) — per COMMIT, which the multi-commit
-    * drills and streaming sinks multiply. Hidden files (`_`/`.`
-    * prefixes) are excluded like Spark's own listing filter; order is
-    * the sorted path order the planner uses.
+    * off the FileSystem ([[visibleFiles]]) and rendered exactly as
+    * Spark's `DataFrame.inputFiles` renders them (URI with explicit
+    * empty authority — `file:///...` — so manifest paths stay
+    * byte-comparable to scan-side file identities). One `listStatus`
+    * per directory of the output tree where the old
+    * `spark.read.parquet(dir).inputFiles` idiom paid a full schema
+    * inference + InMemoryFileIndex build (~70 ms on the fixture) — per
+    * COMMIT, which the multi-commit drills and streaming sinks
+    * multiply. Order is the sorted path order the planner uses.
     */
   def freshFiles(spark: SparkSession, dir: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[String]
-    try {
-      // Recursive: `partitionBy` layouts nest one value-directory
-      // level; every path segment below the root obeys the hidden
-      // filter, like Spark's own recursive listing.
-      val rootDepth = root.toUri.getPath.split("/").length
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val segs = s.getPath.toUri.getPath.split("/").drop(rootDepth)
-        if (s.isFile &&
-            !segs.exists(n => n.startsWith("_") || n.startsWith("."))) {
-          val u = s.getPath.toUri
-          out += new java.net.URI(u.getScheme,
-            Option(u.getAuthority).getOrElse(""), u.getPath, null, null)
-            .toString
-        }
-      }
-    } catch { case _: java.io.FileNotFoundException => }
-    out.result().sorted
+    visibleFiles(fs, root).map { s =>
+      val u = s.getPath.toUri
+      new java.net.URI(u.getScheme,
+        Option(u.getAuthority).getOrElse(""), u.getPath, null, null).toString
+    }.sorted
   }
+
+  /** Every file below `root` whose path carries no hidden (`_`/`.`
+    * prefixed) name at any level — `partitionBy` value directories
+    * recurse, a writer's `_temporary` attempt tree or a dot-directory
+    * is never entered. One `listStatus` per directory, the listing
+    * Spark's own `InMemoryFileIndex` does; plain `FileStatus`es, never
+    * `FileSystem.listFiles`' `LocatedFileStatus`, whose constructor
+    * copies the permissions — on a local filesystem without libhadoop
+    * that forks an `ls -ld` per listed file (~3.5 ms each). A missing
+    * root lists nothing.
+    */
+  private def visibleFiles(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.filterNot(s => hiddenName(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    try walk(root) catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
+  /** The hidden-name test of every data and metadata listing here:
+    * `_`/`.` prefixed names (`_SUCCESS`, `_temporary`, `.crc`
+    * checksums) are never content.
+    */
+  private def hiddenName(n: String): Boolean = n.startsWith("_") || n.startsWith(".")
 
   /** One manifest row in any of the manifest forms: plain `(path)`,
     * merge-on-read `(path, kind)`, zone map
@@ -113,32 +121,45 @@ object SnapshotTable {
     * never data pages.
     */
   private def readManifestRows(spark: SparkSession,
-      dir: String): Seq[ManifestRow] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
+      dir: String): Seq[ManifestRow] =
+    readGroups(spark, dir) { g =>
+      val t = g.getType
+      def str(f: String): Option[String] =
+        if (t.containsField(f) && g.getFieldRepetitionCount(f) > 0)
+          Some(g.getString(f, 0)) else None
+      def lng(f: String): Option[Long] =
+        if (t.containsField(f) && g.getFieldRepetitionCount(f) > 0)
+          Some(g.getLong(f, 0)) else None
+      ManifestRow(g.getString("path", 0), str("kind"), str("key_col"),
+        lng("min_key"), lng("max_key"), lng("seq"),
+        lng("n_rows"), lng("bytes"), lng("n_nulls"))
+    }
+
+  /** Every record of the visible part files of a driver-written
+    * metadata directory (a manifest, a bloom sidecar), in path order,
+    * through parquet-hadoop's Group API — no Spark job. The reader is
+    * built from the session's Hadoop conf, so session parquet read
+    * settings apply; `ParquetReader.builder(support, path)` would parse
+    * a fresh default `Configuration` out of the jars per file (~14 ms)
+    * before its ~1 ms read.
+    */
+  private def readGroups[A](spark: SparkSession, dir: String)(
+      f: org.apache.parquet.example.data.Group => A): Seq[A] = {
+    import org.apache.parquet.example.data.Group
     val conf = spark.sparkContext.hadoopConfiguration
     val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    val parts = fs.listStatus(d).map(_.getPath)
-      .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-      .sortBy(_.toString)
-    parts.flatMap { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), p)
-        .withConf(conf).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        val t = g.getType
-        def str(f: String): Option[String] =
-          if (t.containsField(f) && g.getFieldRepetitionCount(f) > 0)
-            Some(g.getString(f, 0)) else None
-        def lng(f: String): Option[Long] =
-          if (t.containsField(f) && g.getFieldRepetitionCount(f) > 0)
-            Some(g.getLong(f, 0)) else None
-        ManifestRow(g.getString("path", 0), str("kind"), str("key_col"),
-          lng("min_key"), lng("max_key"), lng("seq"),
-          lng("n_rows"), lng("bytes"), lng("n_nulls"))
-      }.toVector
+    val parts = d.getFileSystem(conf).listStatus(d).toSeq
+      .filterNot(s => hiddenName(s.getPath.getName)).sortBy(_.getPath.toString)
+    parts.flatMap { st =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+      val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+          in, new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport() =
+          new org.apache.parquet.hadoop.example.GroupReadSupport()
+      }.build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map(f).toVector
       finally reader.close()
-    }.toSeq
+    }
   }
 
   /** Driver-side manifest write — ONE parquet part file inside the
@@ -1111,7 +1132,7 @@ object SnapshotTable {
     * the footer schema of the first file in path order
     * (`ParquetUtils.splitFiles` sorts by path before picking one).
     */
-  private def fileSchema(spark: SparkSession,
+  private[sources] def fileSchema(spark: SparkSession,
       files: Seq[String]): org.apache.spark.sql.types.StructType =
     mergedFooterSchema(spark, Seq(files.min))
 
@@ -1328,8 +1349,9 @@ object SnapshotTable {
 
   /** Order-preserving parallel map for the per-file footer reads the
     * commit/analyze paths run on the driver: each read is a short
-    * blocking metadata I/O (~5-15 ms open + footer parse), and a
-    * sequential loop makes every commit O(files) × that latency.
+    * blocking metadata I/O (~1 ms open + footer parse on local disk,
+    * an object-store round trip or two remotely), and a sequential
+    * loop makes every commit O(files) × that latency.
     * Pool parallelism keeps wall time ~files/threads while the work
     * stays metadata-plane (footers only, never data pages).
     */
@@ -1357,16 +1379,20 @@ object SnapshotTable {
     * ([[footerStats]], [[fileMeta]], manifest stamping,
     * [[mergedFooterSchema]]) derives from it. An unreadable file is a
     * `Failure`: strict consumers rethrow it with `get`, best-effort
-    * ones record nothing for it.
+    * ones record nothing for it. The read options come from the
+    * session's Hadoop conf (its parquet read settings, decryption
+    * included, apply); the one-argument `ParquetFileReader.open`
+    * would parse a fresh default `Configuration` per file (~14 ms).
     */
   private[sources] def footers(spark: SparkSession, paths: Seq[String])
       : Seq[(String, Try[(ParquetMetadata, Long)])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     parFiles(paths) { f =>
       f -> Try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val p = new org.apache.hadoop.fs.Path(f)
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+          org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
         try (r.getFooter, in.getLength) finally r.close()
       }
     }
@@ -1800,25 +1826,12 @@ object SnapshotTable {
     */
   private def readBloomIndex(spark: SparkSession,
       dir: String): Map[String, Map[Long, Long]] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    val parts = fs.listStatus(d).map(_.getPath)
-      .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-      .sortBy(_.toString)
     val acc = scala.collection.mutable.Map.empty[String, Map[Long, Long]]
-    parts.foreach { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), p)
-        .withConf(conf).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
-        val f = normPath(g.getString("f", 0))
-        acc.updateWith(f) { prev =>
-          Some(prev.getOrElse(Map.empty) +
-            (g.getLong("word", 0) -> g.getLong("bits", 0)))
-        }
-      } finally reader.close()
+    readGroups(spark, dir) { g =>
+      acc.updateWith(normPath(g.getString("f", 0))) { prev =>
+        Some(prev.getOrElse(Map.empty) +
+          (g.getLong("word", 0) -> g.getLong("bits", 0)))
+      }
     }
     acc.toMap
   }
@@ -2074,33 +2087,13 @@ object SnapshotTable {
       .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     val roots = Seq(s"$table/data", s"$table/deletes")
-    // A file is hidden if ANY path component below the root is
-    // dot/underscore-prefixed — a bare leaf-name test would admit
-    // part files inside an in-flight writer's `_temporary` tree.
-    def hidden(p: org.apache.hadoop.fs.Path, root: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur.toUri.getPath != root.toUri.getPath) {
-        val n = cur.getName
-        if (n.startsWith(".") || n.startsWith("_")) return true
-        cur = cur.getParent
-      }
-      false
-    }
+    // A file under a hidden (`_`/`.`) name at ANY level below the root
+    // is never a candidate: a bare leaf-name test would admit part
+    // files inside an in-flight writer's `_temporary` tree.
     val present = roots.flatMap { r =>
       val root = new org.apache.hadoop.fs.Path(r)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) Seq.empty
-      else {
-        val it = fs.listFiles(root, true)
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(org.apache.hadoop.fs.Path, Long)]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && !hidden(f.getPath, root))
-            buf += ((f.getPath, f.getModificationTime))
-        }
-        buf.toSeq
-      }
+      visibleFiles(root.getFileSystem(conf), root)
+        .map(f => (f.getPath, f.getModificationTime))
     }
     val orphans = present.filter { case (p, mtime) =>
       !referenced.contains(p.toUri.getPath) && mtime <= cutoff

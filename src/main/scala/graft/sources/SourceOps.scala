@@ -230,12 +230,12 @@ object SourceOps {
     */
   def compactTo(spark: SparkSession, inDir: String, outDir: String,
       targetBytes: Long): Int = {
-    val df = spark.read.parquet(inDir)
-    // Bytes and rows from the parquet FOOTERS of the files already
-    // listed, one open per file — no Spark job, no data pages read (a
-    // count() would schedule a scan that re-opens every small file, the
-    // very pathology this op repairs).
-    val meta = SnapshotTable.fileMeta(spark, df.inputFiles.toSeq)
+    val files = SnapshotTable.freshFiles(spark, inDir)
+    // Bytes and rows from the parquet FOOTERS of the listed files, one
+    // open per file — no Spark job, no data pages read (a count() would
+    // schedule a scan that re-opens every small file, the very
+    // pathology this op repairs).
+    val meta = SnapshotTable.fileMeta(spark, files)
     val bytes = meta.map(_._3).sum
     // Clamp by row count: repartition(n) emits fewer than n files when
     // rows < n, which would break the returned count's "exactly this
@@ -243,7 +243,14 @@ object SourceOps {
     val rows = meta.map(_._2).sum
     val target = math.max(1L, math.min(
       math.ceil(bytes.toDouble / targetBytes).toLong, rows)).toInt
-    df.repartition(target).write.mode("overwrite").parquet(outDir)
+    // The directory read with the footer schema of its first file
+    // (Spark's own pick): no inference job, and one listing where the
+    // files as paths would start a parallel-listing job past 32.
+    val reader =
+      if (files.isEmpty) spark.read
+      else spark.read.schema(SnapshotTable.fileSchema(spark, files))
+    reader.parquet(inDir)
+      .repartition(target).write.mode("overwrite").parquet(outDir)
     target
   }
 

@@ -1930,7 +1930,8 @@ private[streaming] class SnapshotReaderFactory(schema: StructType,
 
   private def footerNamed(st: org.apache.hadoop.fs.FileStatus): StructType = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf.value))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf.value),
+      org.apache.parquet.HadoopReadOptions.builder(conf.value, st.getPath).build())
     val footer =
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     StructType(schema.fields.map { f =>
