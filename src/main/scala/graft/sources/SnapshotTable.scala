@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
@@ -703,10 +705,10 @@ object SnapshotTable {
     * resolve-by-name contract).
     */
   def recordedSchema(spark: SparkSession, table: String,
-      gen: Long): Option[org.apache.spark.sql.types.StructType] =
+      gen: Long): Option[StructType] =
     recordedSchemaJson(spark, table, gen).map(js =>
       org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .asInstanceOf[StructType])
 
   /** `ALTER TABLE ADD COLUMN`'s commit: publish `newSchema` as the
     * RECORDED schema of a new generation whose manifest carries the
@@ -717,7 +719,7 @@ object SnapshotTable {
     * its own (narrower) schema through time travel.
     */
   def alterSchema(spark: SparkSession, table: String,
-      newSchema: org.apache.spark.sql.types.StructType): Long = {
+      newSchema: StructType): Long = {
     val gens = generations(spark, table)
     require(gens.nonEmpty, s"cannot ALTER $table: no committed generation")
     val gen = gens.max + 1
@@ -761,17 +763,23 @@ object SnapshotTable {
     * generation.
     */
   def manifestEntries(spark: SparkSession, table: String,
-      gen: Long): (Seq[String], Seq[String]) = {
+      gen: Long): (Seq[String], Seq[String]) =
+    splitEntries(plainRows(spark, table, gen))
+
+  /** Generation `gen`'s manifest rows for a plain read. A SEGMENT
+    * manifest ([[commitSegment]]) lists only its own batch's files plus
+    * a parent reference — every plain reader must refuse it loudly,
+    * because silently returning the segment's own rows would serve a
+    * fraction of the snapshot as if it were the whole table.
+    */
+  private def plainRows(spark: SparkSession, table: String,
+      gen: Long): Seq[ManifestRow] = {
     val rows = readManifestRows(spark, manifestPath(table, gen))
-    // A SEGMENT manifest ([[commitSegment]]) lists only its own batch's
-    // files plus a parent reference — every plain reader must refuse it
-    // loudly, because silently returning the segment's own rows would
-    // serve a fraction of the snapshot as if it were the whole table.
     require(!rows.exists(_.kind.contains(ParentKind)),
       s"generation $gen of $table is a SEGMENT manifest (parent-linked); " +
         "resolve it with readSegmented/resolvedFiles — a plain read " +
         "would silently see only the segment's own files")
-    splitEntries(rows)
+    rows
   }
 
   private def splitEntries(rows: Seq[ManifestRow]): (Seq[String], Seq[String]) =
@@ -909,7 +917,7 @@ object SnapshotTable {
     * at O(new files) commit cost.
     */
   def readSegmented(spark: SparkSession, table: String, gen: Long): DataFrame =
-    readFiles(spark, resolvedFiles(spark, table, gen))
+    readFiles(spark, resolvedDataRows(spark, table, gen).map(r => r._1 -> r._3))
 
   /** Row count of one generation's OWN manifest (the O(batch)-commit
     * evidence the segments query value-gates).
@@ -1067,46 +1075,47 @@ object SnapshotTable {
         .foreach(p => fs.delete(p, true))
   }
 
-  /** Read generation `gen` with its merge-on-read tombstones applied:
-    * the data scan is exactly the manifest's data files, and the
-    * accumulated delete keys anti-join on `keyCol`. For a generation
-    * with no tombstones this IS [[readAs]] (no join in the plan).
+  /** Read generation `gen` with its merge-on-read tombstones applied,
+    * as ONE plan whatever the number of sequence classes: one scan of
+    * every data file, each row tagged with its file's data sequence
+    * (absent reads as 0), LEFT ANTI joined with one scan of every
+    * tombstone file, each key tagged with its file's sequence, on
+    * `key = key AND tomb_seq > data_seq`. That join condition IS the
+    * sequence-scoped visibility rule: a stamped tombstone
+    * ([[commitUpsert]]) hides only data with a strictly smaller
+    * sequence, and an unstamped one ([[commitDeletes]]) is tagged
+    * `Long.MaxValue`, so it hides every row of its key. NULL keys
+    * never match and survive. The tags are partition values of the
+    * manifest-backed scan ([[ManifestFileIndex]]), not literals in the
+    * plan, so a generation with more classes plans the same jobs,
+    * exchanges and generated code. The data scan reads the footer
+    * union of its files in (seq, path) order — a seq-scoped lineage
+    * can EVOLVE (an upsert batch or a later append adds a column), and
+    * absent columns read back as NULL, the same contract as
+    * [[readAsMerged]] and the connector. For a generation with no
+    * tombstones this IS [[readAs]] (no join in the plan).
     */
   def readMor(spark: SparkSession, table: String, gen: Long,
       keyCol: String): DataFrame = {
-    val rows = readManifestRows(spark, manifestPath(table, gen))
+    val rows = plainRows(spark, table, gen)
     val dataRows = rows.filter(_.kind.forall(_ == "data"))
     val delRows = rows.filter(_.kind.contains("delete"))
-    if (delRows.isEmpty) readAs(spark, table, gen)
+    if (delRows.isEmpty) readFiles(spark, sizedFiles(dataRows))
     else {
-      // Sequence-scoped visibility: an unstamped tombstone
-      // ([[commitDeletes]]) applies to every data file; a stamped one
-      // ([[commitUpsert]]) only to data with a strictly smaller
-      // sequence. Data files group into ≤ #commits-since-materialize
-      // sequence classes; each class scans its own files once and
-      // anti-joins the tombstone keys that outrank it — bounded
-      // per-class plans, one union, no data rewrite.
-      dataRows.groupBy(_.seq.getOrElse(0L)).toSeq.sortBy(_._1).map {
-        case (s, rs) =>
-          val applicable = delRows
-            .filter(d => d.seq.forall(_ > s)).map(_.path).distinct.sorted
-          // Footer-union schema per class + by-name union with missing
-          // columns allowed: a seq-scoped lineage can EVOLVE (an upsert
-          // batch or a later append adds a column), so neither the
-          // files of one class nor the classes themselves are
-          // guaranteed to share a schema — absent columns read back as
-          // NULL, the same contract as [[readAsMerged]] and the
-          // connector.
-          val clsFiles = rs.map(_.path).distinct.sorted
-          val data = spark.read
-            .schema(mergedFooterSchema(spark, clsFiles))
-            .parquet(clsFiles: _*)
-          if (applicable.isEmpty) data
-          else data.join(
-            readFiles(spark, applicable)
-              .select(org.apache.spark.sql.functions.col(keyCol)).distinct(),
-            Seq(keyCol), "left_anti")
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      def classes(rs: Seq[ManifestRow], seq: ManifestRow => Long) =
+        rs.groupBy(seq).toSeq.sortBy(_._1).map { case (s, g) => s -> sizedFiles(g) }
+      val data = classes(dataRows, _.seq.getOrElse(0L))
+      val dels = classes(delRows, _.seq.getOrElse(Long.MaxValue))
+      val schema = mergedFooterSchema(spark, data.flatMap(_._2.map(_._1)))
+      val seqCol = Iterator.from(0).map(i => s"_seq$i")
+        .find(n => !schema.fieldNames.exists(_.equalsIgnoreCase(n))).get
+      val seqSchema = StructType(Seq(StructField(seqCol, LongType, nullable = false)))
+      def tagged(schema: StructType, cls: Seq[(Long, Seq[(String, Option[Long])])]) =
+        scanFiles(spark, schema, seqSchema, cls.map { case (s, fs) => InternalRow(s) -> fs })
+      val d = tagged(schema, data)
+      val t = tagged(fileSchema(spark, dels.flatMap(_._2.map(_._1))), dels)
+      d.join(t, d(keyCol) === t(keyCol) && t(seqCol) > d(seqCol), "left_anti")
+        .drop(seqCol)
     }
   }
 
@@ -1116,24 +1125,77 @@ object SnapshotTable {
     * invisible because they were never handed to the reader.
     */
   def readAs(spark: SparkSession, table: String, gen: Long): DataFrame =
-    readFiles(spark, listFiles(spark, table, gen))
+    readFiles(spark, dataFiles(spark, table, gen))
 
-  /** Read manifest-listed `files` with [[fileSchema]] — the plain-read
-    * contract (homogeneous files; evolved lineages use
-    * [[readAsMerged]]) at the price of one cached footer read instead
-    * of a schema-inference job per call. No files keeps Spark's own
-    * "unable to infer schema" error.
+  /** Generation `gen`'s data files with their recorded sizes. */
+  private def dataFiles(spark: SparkSession, table: String,
+      gen: Long): Seq[(String, Option[Long])] =
+    sizedFiles(plainRows(spark, table, gen).filter(_.kind.forall(_ == "data")))
+
+  /** Each distinct path of `rows` with its recorded on-disk size (the
+    * long zone-map form repeats a path once per column; any of its rows
+    * serves), in path order.
     */
-  private def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+  private def sizedFiles(rows: Seq[ManifestRow]): Seq[(String, Option[Long])] =
+    rows.groupBy(_.path).map { case (p, rs) => p -> rs.flatMap(_.bytes).headOption }
+      .toSeq.sortBy(_._1)
+
+  /** Read manifest-listed `(path, recorded bytes)` files with
+    * [[fileSchema]] — the plain-read contract (homogeneous files;
+    * evolved lineages use [[readAsMerged]]) at the price of one cached
+    * footer read instead of a schema-inference job per call. No files
+    * keeps Spark's own "unable to infer schema" error.
+    */
+  private def readFiles(spark: SparkSession, files: Seq[(String, Option[Long])],
+      schema: Option[StructType] = None): DataFrame =
     if (files.isEmpty) spark.read.parquet()
-    else spark.read.schema(fileSchema(spark, files)).parquet(files: _*)
+    else scanFiles(spark, schema.getOrElse(fileSchema(spark, files.map(_._1))),
+      new StructType(), Seq(InternalRow.empty -> files))
+
+  /** A parquet scan of manifest-listed files, handed to Spark through a
+    * [[ManifestFileIndex]]: each group's rows carry its values of
+    * `partitionSchema`. Where `spark.read.parquet(paths)` builds an
+    * `InMemoryFileIndex` — one `getFileStatus` per path, and past 32
+    * paths (`spark.sql.sources.parallelPartitionDiscovery.threshold`) a
+    * parallel-listing Spark job — a file with a recorded size gets its
+    * status straight from the manifest; only a legacy row (no `bytes`)
+    * pays one `getFileStatus`. Each path is qualified as
+    * `InMemoryFileIndex` qualifies a given path, so `inputFiles`,
+    * `input_file_name()` and `_metadata` read exactly as before.
+    */
+  private def scanFiles(spark: SparkSession, dataSchema: StructType,
+      partitionSchema: StructType,
+      groups: Seq[(InternalRow, Seq[(String, Option[Long])])]): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(f: String): Path = {
+      val p = new Path(f)
+      p.getFileSystem(conf).makeQualified(p)
+    }
+    val parts = groups.map { case (values, files) =>
+      val (sized, legacy) = files.partition(_._2.isDefined)
+      val statuses = sized.map { case (f, n) =>
+        new FileStatus(n.get, false, 1, 0L, 0L, qualified(f))
+      } ++ parFiles(legacy) { case (f, _) =>
+        val p = qualified(f)
+        new FileStatus(p.getFileSystem(conf).getFileStatus(p).getLen, false, 1, 0L, 0L, p)
+      }
+      PartitionDirectory(values, statuses.map(FileStatusWithMetadata(_)))
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestFileIndex(partitionSchema, parts), partitionSchema, dataSchema,
+      bucketSpec = None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark))
+  }
 
   /** The schema Spark's inference gives `files` without mergeSchema:
     * the footer schema of the first file in path order
     * (`ParquetUtils.splitFiles` sorts by path before picking one).
     */
   private[sources] def fileSchema(spark: SparkSession,
-      files: Seq[String]): org.apache.spark.sql.types.StructType =
+      files: Seq[String]): StructType =
     mergedFooterSchema(spark, Seq(files.min))
 
   /** [[readAs]] for a generation whose files carry EVOLVED schemas:
@@ -1145,8 +1207,8 @@ object SnapshotTable {
     * the catalog and hands it to the scan directly.
     */
   def readAsMerged(spark: SparkSession, table: String, gen: Long): DataFrame = {
-    val files = listFiles(spark, table, gen)
-    spark.read.schema(mergedFooterSchema(spark, files)).parquet(files: _*)
+    val files = dataFiles(spark, table, gen)
+    readFiles(spark, files, Some(mergedFooterSchema(spark, files.map(_._1))))
   }
 
   /** The manifest diff between two generations: `(added, removed)`
@@ -1284,7 +1346,7 @@ object SnapshotTable {
     * can see yet.
     */
   def readStaged(spark: SparkSession, table: String, branch: String): DataFrame =
-    readFiles(spark, stagedFiles(spark, table, branch))
+    readFiles(spark, stagedFileStats(spark, table, branch).map(r => r._1 -> r._3))
 
   /** PUBLISH half: fast-forward the audited branch into the generation
     * lineage as `gen` — the staged files enter the manifest BY
@@ -1404,14 +1466,36 @@ object SnapshotTable {
     * columnar writer already produced for free; [[publishStats]]
     * records it, giving the manifest a zone map per dimension (a
     * Z-ORDERed layout makes every recorded dimension's per-file bounds
-    * tight at once).
+    * tight at once). The rows come with the file's row count, bytes
+    * and the column's NULL count read from the same open, so
+    * [[publishStats]] of them opens no footer again.
     */
   def footerStats(spark: SparkSession, paths: Seq[String],
       columns: Seq[String]): Seq[(String, String, Long, Long)] =
-    footers(spark, paths).flatMap { case (f, t) => zoneRows(f, t.get._1, columns) }
+    new ZoneRows(footers(spark, paths).flatMap { case (f, t) =>
+      val (meta, bytes) = t.get
+      zoneRows(f, meta, columns).map(_.copy(nRows = Some(rowCount(meta)),
+        bytes = Some(bytes)))
+    }.toVector)
 
+  /** [[footerStats]]' zone rows as the `(path, column, min, max)`
+    * tuples its callers read, each backed by a complete manifest row.
+    * Any transformation of the sequence yields plain tuples, whose
+    * stats [[publishStats]] reads from the footers.
+    */
+  private final class ZoneRows(val rows: Vector[ManifestRow])
+      extends scala.collection.immutable.AbstractSeq[(String, String, Long, Long)]
+      with scala.collection.immutable.IndexedSeq[(String, String, Long, Long)] {
+    def apply(i: Int): (String, String, Long, Long) = {
+      val r = rows(i)
+      (r.path, r.keyCol.get, r.minKey.get, r.maxKey.get)
+    }
+    def length: Int = rows.length
+  }
+
+  /** `f`'s zone-map manifest rows for `columns`, NULL counts included. */
   private def zoneRows(f: String, meta: ParquetMetadata,
-      columns: Seq[String]): Seq[(String, String, Long, Long)] = {
+      columns: Seq[String]): Seq[ManifestRow] = {
     val blocks = meta.getBlocks.asScala
     // Zero-row files (a slice writer can legitimately emit a
     // schema-only part file for an empty key range) carry no row
@@ -1438,9 +1522,10 @@ object SnapshotTable {
             s"(${other.getClass.getSimpleName}); zone maps record " +
             "integer-physical columns only")
       }
-      (f, column,
-        stats.map(s => asLong(s.genericGetMin)).min,
-        stats.map(s => asLong(s.genericGetMax)).max)
+      ManifestRow(f, keyCol = Some(column),
+        minKey = Some(stats.map(s => asLong(s.genericGetMin)).min),
+        maxKey = Some(stats.map(s => asLong(s.genericGetMax)).max),
+        nNulls = nullCount(meta, column))
     }
   }
 
@@ -1558,17 +1643,23 @@ object SnapshotTable {
     // row count and bytes — what makes a zone row's non-null row count
     // derivable (nRows − nNulls): the sound "rows provably sorting
     // before this file" proof the TopN pushdown needs under NULLS LAST
-    // orderings. An unreadable footer or unset statistic records None
-    // and the file neither proves nor excludes.
-    val meta = footers(spark, rows.map(_._1).distinct)
-      .collect { case (p, Success(m)) => p -> m }.toMap
+    // orderings. [[footerStats]]' own rows carry them already; plain
+    // tuples read them here. An unreadable footer or unset statistic
+    // records None and the file neither proves nor excludes.
+    val manifest = rows match {
+      case z: ZoneRows => z.rows
+      case _ =>
+        val meta = footers(spark, rows.map(_._1).distinct)
+          .collect { case (p, Success(m)) => p -> m }.toMap
+        rows.map { case (p, c, mn, mx) =>
+          val m = meta.get(p)
+          ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
+            nRows = m.map(x => rowCount(x._1)), bytes = m.map(_._2),
+            nNulls = m.flatMap(x => nullCount(x._1, c)))
+        }
+    }
     writeManifest(spark, table, gen, replace = false,
-      rows.sortBy(r => (r._1, r._2)).map { case (p, c, mn, mx) =>
-        val m = meta.get(p)
-        ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
-          nRows = m.map(x => rowCount(x._1)), bytes = m.map(_._2),
-          nNulls = m.flatMap(x => nullCount(x._1, c))) },
-      Some(action))
+      manifest.sortBy(r => (r.path, r.keyCol)), Some(action))
   }
 
   /** Files of generation `gen` admitted by CONJUNCTIVE per-column
@@ -1665,7 +1756,7 @@ object SnapshotTable {
   def writeBloomIndex(spark: SparkSession, table: String, column: String,
       files: Seq[String], append: Boolean = false): String = {
     val path = bloomIndexPath(table, column)
-    readFiles(spark, files)
+    readFiles(spark, files.distinct.sorted.map(_ -> None))
       .select(input_file_name().as("f"),
         explode(bloomPositionsCol(col(column))).as("p"))
       .select(col("f"), expr("p div 32").as("word"),
@@ -1894,9 +1985,9 @@ object SnapshotTable {
       case ManifestRow(p, _, Some(c), Some(mn), Some(mx), _, _, _, _)
           if c == column && (mn > hi || mx < lo) => p
     }.toSet
-    val paths = rows.collect { case r if r.kind.forall(_ == "data") => r.path }
-      .distinct.filterNot(excluded).sorted
-    if (paths.isEmpty) {
+    val files = sizedFiles(rows.filter(r => r.kind.forall(_ == "data") &&
+      !excluded(r.path)))
+    if (files.isEmpty) {
       // No file admitted: return an EMPTY frame with the table's schema
       // from the FOOTERS of every manifest file (mergeSchema unions
       // evolving schemas — metadata reads only, no data pages) — never
@@ -1910,7 +2001,7 @@ object SnapshotTable {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else
-      readFiles(spark, paths)
+      readFiles(spark, files)
         .filter(col(column) >= lo && col(column) <= hi)
   }
 
@@ -1919,7 +2010,7 @@ object SnapshotTable {
     * and schema resolution runs per SQL-statement table load.
     */
   private val fileSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+    String, StructType]
 
   /** The schema `spark.read.option("mergeSchema", true)` would infer
     * over `files`, computed on the DRIVER from their footers: Spark's
@@ -1932,7 +2023,7 @@ object SnapshotTable {
     * call (~70-90 ms each on a 4-core VM).
     */
   def mergedFooterSchema(spark: SparkSession,
-      files: Seq[String]): org.apache.spark.sql.types.StructType = {
+      files: Seq[String]): StructType = {
     require(files.nonEmpty, "mergedFooterSchema needs at least one file")
     val missing = files.distinct.filterNot(fileSchemaCache.containsKey)
     if (missing.nonEmpty) {
@@ -2212,13 +2303,9 @@ object SnapshotTable {
       recordedFileStats(spark, table, gen)
     // Zone rows and NULL counts from the same footer open.
     val fresh = footers(spark, data).flatMap { case (p, t) =>
-      val meta = t.get._1
-      zoneRows(p, meta, columns).map { case (_, c, mn, mx) =>
-        ManifestRow(p, keyCol = Some(c), minKey = Some(mn), maxKey = Some(mx),
-          nRows = metaOf.get(p).flatMap(_._1),
-          bytes = metaOf.get(p).flatMap(_._2),
-          nNulls = nullCount(meta, c))
-      }
+      zoneRows(p, t.get._1, columns).map(_.copy(
+        nRows = metaOf.get(p).flatMap(_._1),
+        bytes = metaOf.get(p).flatMap(_._2)))
     }
     val kept = prev.filterNot(_.keyCol.exists(columns.contains))
     writeManifest(spark, table, gen + 1, replace = false,
@@ -2245,7 +2332,7 @@ object SnapshotTable {
       case Some(rec) if SnapshotSource.aliasMapOf(rec).nonEmpty ||
           rec.fields.exists(SnapshotSource.isDropped) =>
         val claimed = SnapshotSource.claimedNames(rec)
-        val serving = org.apache.spark.sql.types.StructType(
+        val serving = StructType(
           rec.fields.filterNot(SnapshotSource.isDropped) ++
             raw.schema.fields.filterNot(f =>
               claimed.exists(_.equalsIgnoreCase(f.name))))
@@ -2323,4 +2410,41 @@ object SnapshotTable {
     }
     commit(src.repartition(files), table, fromGen + 1, action = "compact")
   }
+}
+
+/** The file index of [[SnapshotTable]]'s manifest reads: the manifest's
+  * files, grouped into partitions whose values every row of the group
+  * carries (a merge-on-read scan's sequence tags), handed to Spark
+  * without a listing. Partition filters prune groups exactly as a
+  * listed index prunes directories. Two indexes over the same files
+  * and tags are equal, as two `InMemoryFileIndex`es over the same paths
+  * are, so a cached read of a generation serves a later read of it.
+  */
+private[sources] final case class ManifestFileIndex(partitionSchema: StructType,
+    parts: Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory])
+    extends org.apache.spark.sql.execution.datasources.FileIndex {
+  import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+
+  private val files = parts.flatMap(_.files)
+
+  override def rootPaths: Seq[org.apache.hadoop.fs.Path] = files.map(_.getPath)
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression])
+      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
+    if (partitionFilters.isEmpty) parts
+    else {
+      val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+        case a: AttributeReference =>
+          val i = partitionSchema.indexWhere(a.name == _.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      })
+      parts.filter(p => keep.eval(p.values))
+    }
+
+  override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+
+  override def refresh(): Unit = ()
+
+  override def sizeInBytes: Long = files.map(_.getLen).sum
 }

@@ -71,6 +71,12 @@ object StreamDrill {
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatches.toString)
     s.conf.set("spark.sql.shuffle.partitions", "4")
+    // Every query start clones its session, and each clone gets a fresh
+    // artifact-session UUID under isolation. Executors build one class
+    // loader per UUID, and Spark's generated-code cache keys on (class
+    // loader, code), so each restart of a query recompiled its whole
+    // plan. Drill sessions add no artifacts: nothing needs isolating.
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
     s
   }
 }

@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
   *    permissions: on a local filesystem without libhadoop that forks
   *    an `ls -ld` per listed file.
   *
-  * Comments and string literals are blanked before matching.
+  * Comments and string literals are blanked before matching, and a
+  * method definition of the same name (`def listFiles(...)`, as a
+  * Spark `FileIndex` declares one) is not a call.
   */
 class ForbiddenApiSpec extends AnyFunSuite {
   import ForbiddenApiSpec._
@@ -37,6 +39,7 @@ class ForbiddenApiSpec extends AnyFunSuite {
         |  val c = fs.listFiles(root, true)
         |  val d = SnapshotTable.listFiles(spark, t, 1L)
         |  val e = new java.io.File(x).listFiles()
+        |  override def listFiles(p: Seq[E], d: Seq[E]) = Nil
         |}
         |""".stripMargin
     assert(violations(src).map(_._1) === Seq(6, 8, 9))
@@ -63,7 +66,7 @@ object ForbiddenApiSpec {
     val code = blankCommentsAndStrings(src)
     def lineOf(i: Int): Int = code.substring(0, i).count(_ == '\n') + 1
     def calls(name: String): Seq[(Int, Int)] =
-      ("\\b" + java.util.regex.Pattern.quote(name) + "\\s*\\(").r
+      ("(?<!\\bdef\\s{1,16})\\b" + java.util.regex.Pattern.quote(name) + "\\s*\\(").r
         .findAllMatchIn(code).map(m => (m.start, argCount(code, m.end))).toSeq
     (calls("ParquetFileReader.open").collect {
       case (i, 1) => lineOf(i) -> "one-argument ParquetFileReader.open (default Configuration)"

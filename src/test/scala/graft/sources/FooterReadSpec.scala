@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The snapshot layer's driver-side metadata reads: file schemas come
-  * from parquet footers (Spark's own conversion, no inference job), and
-  * commits and merge-on-read plans start no job to learn a schema.
+  * from parquet footers (Spark's own conversion, no inference job),
+  * commits and merge-on-read plans start no job to learn a schema, and
+  * a zone-map publish opens each footer once.
   */
 class FooterReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -74,4 +75,48 @@ class FooterReadSpec extends AnyFunSuite {
     val got = mor.as[(Long, Long)].collect().toMap
     assert(got === (0L until 400L).map(k => k -> (if (k % 2 == 0) k * 10 else k)).toMap)
   }
+
+  test("publishStats of footerStats opens each footer once") {
+    val dir = graft.Scratch.dir("footer_open_count_spec")
+    spark.range(0, 400, 1, 4).selectExpr("id AS k", "IF(id % 7 = 0, NULL, id) AS v")
+      .write.mode("overwrite").parquet(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[OpenCountingFs].getName)
+    val files = SnapshotTable.freshFiles(spark, dir).map(_.replaceFirst("^file:", "countfs:"))
+    assert(files.size === 4)
+    def opensDuring(body: => Unit): Int = {
+      val before = OpenCountingFs.opens.get
+      body
+      OpenCountingFs.opens.get - before
+    }
+    val table = graft.Scratch.dir("footer_open_count_table")
+    assert(opensDuring(SnapshotTable.publishStats(spark, table, 1L,
+      SnapshotTable.footerStats(spark, files, Seq("k", "v")))) === files.size)
+    // Rows that lost footerStats' stats are read from their footers,
+    // and both forms record the same manifest.
+    assert(opensDuring(SnapshotTable.publishStats(spark, table, 2L,
+      SnapshotTable.footerStats(spark, files, Seq("k", "v")).map(identity))) === 2 * files.size)
+    def manifest(gen: Long) = spark.read.parquet(s"$table/manifests/gen=$gen")
+      .select("path", "key_col", "min_key", "max_key", "n_rows", "bytes", "n_nulls")
+      .collect().map(_.toSeq).toSet
+    assert(manifest(1L) === manifest(2L))
+    assert(manifest(1L).size === 8)
+    assert(manifest(1L).forall(r => r(4) == 100L && r(5) != null && r(6) != null))
+  }
+}
+
+/** The local filesystem under the `countfs` scheme, counting the files
+  * it opens.
+  */
+class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    OpenCountingFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opens = new AtomicInteger
 }
