@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -168,12 +168,13 @@ object SnapshotTable {
     * staging DIRECTORY (the directory, not the file, is what the
     * atomic rename publishes, so the first-writer-wins semantics of
     * [[writeManifestAt]] — including the POSIX nested-rename
-    * detection — are unchanged). Column order is canonical
+    * detection — are unchanged), through `conf`, a private copy the
+    * write schema is set on. Column order is canonical
     * (path, kind?, key_col?, min_key?, max_key?) so positional tuple
     * reads of the stats forms keep working.
     */
-  private def writeManifestRows(spark: SparkSession, stagingDir: String,
-      rows: Seq[ManifestRow]): Unit = {
+  private def writeManifestRows(conf: org.apache.hadoop.conf.Configuration,
+      stagingDir: String, rows: Seq[ManifestRow]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -197,8 +198,6 @@ object SnapshotTable {
     if (hasMeta) { lngField("n_rows"); lngField("bytes") }
     if (hasNulls) lngField("n_nulls")
     val msgType = b.named("spark_schema")
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
     GroupWriteSupport.setSchema(msgType, conf)
     val writer = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$stagingDir/part-00000.parquet"))
@@ -219,6 +218,16 @@ object SnapshotTable {
     } finally writer.close()
   }
 
+  /** The writer of every DataFrame write the snapshot layer owns. Its
+    * Hadoop conf opens `file:` paths through [[InProcessLocalFileSystem]],
+    * so the write's file creates and directory makes start no `chmod`
+    * process; the committer, the bytes and the `.crc` siblings are
+    * Spark's and Hadoop's own. `ForbiddenApiSpec` keeps every parquet
+    * write of `graft.sources` on it.
+    */
+  private[graft] def writerFor(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(InProcessLocalFileSystem.writeKeys)
+
   /** Commit `df` as generation `gen`: write its data files under a
     * generation-private directory, then publish the manifest listing
     * them (plus everything `carryFrom`'s manifest already listed, for
@@ -238,7 +247,7 @@ object SnapshotTable {
     val genDir = s"$table/data/gen=$gen"
     val attempt = attemptName()
     val dataDir = s"$genDir/a=$attempt"
-    df.write.mode("overwrite").parquet(dataDir)
+    writerFor(df).mode("overwrite").parquet(dataDir)
     val fresh = freshFiles(spark, dataDir)
     publishAppend(spark, table, gen, fresh, carryFrom, replace, action)
     // Post-switch cleanup: earlier attempts of THIS generation are now
@@ -383,7 +392,8 @@ object SnapshotTable {
   def recordPartitionColumn(spark: SparkSession, table: String,
       column: String): Unit = {
     val d = new org.apache.hadoop.fs.Path(s"$table/meta")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = d.getFileSystem(
+      InProcessLocalFileSystem.writeConf(spark.sparkContext.hadoopConfiguration))
     fs.mkdirs(d)
     fs.create(new org.apache.hadoop.fs.Path(d, s"partition=$column"),
       false).close()
@@ -603,10 +613,11 @@ object SnapshotTable {
     // rename, publishing B's content under A's "successful" commit —
     // the silent lineage mix-up the whole protocol exists to prevent.
     val tmp = new org.apache.hadoop.fs.Path(stagingPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = InProcessLocalFileSystem.writeConf(spark.sparkContext.hadoopConfiguration)
+    val fs = target.getFileSystem(conf)
     fs.delete(tmp, true)
     fs.mkdirs(tmp)
-    writeManifestRows(spark, tmp.toString, rows)
+    writeManifestRows(conf, tmp.toString, rows)
     // The commit's ACTION rides inside the staged directory (one empty
     // `.action=<name>` marker), so it publishes atomically with the
     // file list — the Iceberg snapshot-summary `operation` analogue.
@@ -824,7 +835,7 @@ object SnapshotTable {
     val spark = df.sparkSession
     val genDir = s"$table/data/gen=$gen"
     val dataDir = s"$genDir/a=${attemptName()}"
-    df.write.mode("overwrite").parquet(dataDir)
+    writerFor(df).mode("overwrite").parquet(dataDir)
     val fresh = freshFiles(spark, dataDir)
     writeManifest(spark, table, gen, replace = false,
       metaRows(spark, fresh) ++
@@ -978,7 +989,7 @@ object SnapshotTable {
       carryFrom: Long): Unit = {
     val spark = keys.sparkSession
     val delDir = s"$table/deletes/gen=$gen/a=${attemptName()}"
-    keys.write.mode("overwrite").parquet(delDir)
+    writerFor(keys).mode("overwrite").parquet(delDir)
     val fresh = freshFiles(spark, delDir)
     // Full-row carry; the fresh tombstones stay UNSTAMPED — the legacy
     // whole-snapshot delete scope (vs [[commitUpsert]]'s seq-scoped
@@ -1010,7 +1021,7 @@ object SnapshotTable {
     val delGenDir = s"$table/deletes/gen=$gen"
     val attempt = attemptName()
     val dataDir = s"$genDir/a=$attempt"
-    df.write.mode("overwrite").parquet(dataDir)
+    writerFor(df).mode("overwrite").parquet(dataDir)
     val freshData = freshFiles(spark, dataDir)
     val delDir = s"$delGenDir/a=$attempt"
     // The tombstone keys project from the data files JUST WRITTEN, not
@@ -1020,10 +1031,10 @@ object SnapshotTable {
     // key column exactly, so the written rows ARE the batch — same key
     // set, and the distinct() keeps the key-uniqueness guard below
     // honest (keyRows counts DISTINCT keys, not batch rows).
-    spark.read.schema(mergedFooterSchema(spark, freshData))
+    writerFor(spark.read.schema(mergedFooterSchema(spark, freshData))
       .parquet(freshData: _*)
-      .select(col(keyCol)).distinct().coalesce(1)
-      .write.mode("overwrite").parquet(delDir)
+      .select(col(keyCol)).distinct().coalesce(1))
+      .mode("overwrite").parquet(delDir)
     val freshDels = freshFiles(spark, delDir)
     // Latest-row-per-key only holds if the batch itself is one row per
     // key: every batch row lands stamped seq=gen and the tombstone
@@ -1306,7 +1317,7 @@ object SnapshotTable {
     val spark = df.sparkSession
     import spark.implicits._
     val dataDir = s"$table/data/branch=$branch/a=${attemptName()}"
-    df.write.mode("overwrite").parquet(dataDir)
+    writerFor(df).mode("overwrite").parquet(dataDir)
     // An all-empty-partition write leaves no part files; the listing
     // returns empty — an empty staged batch is legal (it audits as
     // empty and abandons).
@@ -1756,7 +1767,7 @@ object SnapshotTable {
   def writeBloomIndex(spark: SparkSession, table: String, column: String,
       files: Seq[String], append: Boolean = false): String = {
     val path = bloomIndexPath(table, column)
-    readFiles(spark, files.distinct.sorted.map(_ -> None))
+    val index = readFiles(spark, files.distinct.sorted.map(_ -> None))
       .select(input_file_name().as("f"),
         explode(bloomPositionsCol(col(column))).as("p"))
       .select(col("f"), expr("p div 32").as("word"),
@@ -1764,12 +1775,12 @@ object SnapshotTable {
       .groupBy("f", "word")
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT)))")
         .as("bits"))
-      // append = INCREMENTAL maintenance: an ingest batch indexes only
-      // its own files and lands them as additional sidecar parts, so
-      // per-batch index cost tracks the batch, never the table (per-
-      // file rows are disjoint by construction — each file's bits land
-      // exactly once; a REBUILD after compaction uses overwrite).
-      .write.mode(if (append) "append" else "overwrite").parquet(path)
+    // append = INCREMENTAL maintenance: an ingest batch indexes only
+    // its own files and lands them as additional sidecar parts, so
+    // per-batch index cost tracks the batch, never the table (per-
+    // file rows are disjoint by construction — each file's bits land
+    // exactly once; a REBUILD after compaction uses overwrite).
+    writerFor(index).mode(if (append) "append" else "overwrite").parquet(path)
     path
   }
 
@@ -2371,11 +2382,11 @@ object SnapshotTable {
     require(touched.nonEmpty,
       s"partition $col=$value of $table has no routed files")
     val dataDir = s"$table/data/gen=${gen + 1}/a=${attemptName()}/p=$value"
-    shapedForRewrite(spark, table, gen,
+    writerFor(shapedForRewrite(spark, table, gen,
         spark.read.schema(mergedFooterSchema(spark, touched))
           .parquet(touched: _*))
-      .repartition(files)
-      .write.mode("overwrite").parquet(dataDir)
+      .repartition(files))
+      .mode("overwrite").parquet(dataDir)
     val fresh = freshFiles(spark, dataDir)
     publishSubsetRewrite(spark, table, gen + 1, touched.toSet, fresh,
       "compact", freshPartition = Some((col, value)))

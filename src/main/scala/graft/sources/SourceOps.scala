@@ -65,9 +65,9 @@ object SourceOps {
     */
   def variantRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratch("events_variant")
-    graft.Tables.events(spark, dir)
-      .select(col("event_type"), parse_json(col("props")).as("v"))
-      .write.mode("overwrite").parquet(out)
+    SnapshotTable.writerFor(graft.Tables.events(spark, dir)
+      .select(col("event_type"), parse_json(col("props")).as("v")))
+      .mode("overwrite").parquet(out)
     spark.read.parquet(out)
       .select(col("event_type"), variant_get(col("v"), "$.k", "long").as("k"))
       .groupBy("event_type")
@@ -82,9 +82,9 @@ object SourceOps {
     */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratch("customer_xml")
-    Tables.customer(spark, dir)
-      .select("c_custkey", "c_mktsegment", "c_acctbal")
-      .write.mode("overwrite").option("rowTag", "customer").xml(out)
+    SnapshotTable.writerFor(Tables.customer(spark, dir)
+      .select("c_custkey", "c_mktsegment", "c_acctbal"))
+      .mode("overwrite").option("rowTag", "customer").xml(out)
     spark.read
       .schema("c_custkey LONG, c_mktsegment STRING, c_acctbal DOUBLE")
       .option("rowTag", "customer")
@@ -102,7 +102,7 @@ object SourceOps {
     val out = scratch("lineitem_csv")
     val src = Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    src.write.mode("overwrite").option("header", "true").csv(out)
+    SnapshotTable.writerFor(src).mode("overwrite").option("header", "true").csv(out)
     spark.read
       .schema("l_orderkey LONG, l_linenumber INT, l_quantity DOUBLE, l_returnflag STRING")
       .option("header", "true")
@@ -116,9 +116,9 @@ object SourceOps {
   /** JSON sink → JSON source → aggregate (schema-on-read). */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratch("orders_json")
-    Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .write.mode("overwrite").json(out)
+    SnapshotTable.writerFor(Tables.orders(spark, dir)
+      .select("o_orderkey", "o_orderstatus", "o_totalprice"))
+      .mode("overwrite").json(out)
     spark.read
       .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE")
       .json(out)
@@ -143,11 +143,11 @@ object SourceOps {
   def jsonCorrupt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = scratch("orders_json_corrupt")
-    Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .write.mode("overwrite").json(out)
-    (1 to CorruptLines).map(i => s"{broken json line $i").toDF("value")
-      .coalesce(1).write.mode("append").text(out)
+    SnapshotTable.writerFor(Tables.orders(spark, dir)
+      .select("o_orderkey", "o_orderstatus", "o_totalprice"))
+      .mode("overwrite").json(out)
+    SnapshotTable.writerFor((1 to CorruptLines).map(i => s"{broken json line $i")
+      .toDF("value").coalesce(1)).mode("append").text(out)
     spark.read
       .schema("o_orderkey LONG, o_orderstatus STRING, o_totalprice DOUBLE, _corrupt_record STRING")
       .json(out)
@@ -163,9 +163,9 @@ object SourceOps {
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratch("part_orc")
-    Tables.part(spark, dir)
-      .select("p_partkey", "p_brand", "p_retailprice")
-      .write.mode("overwrite").orc(out)
+    SnapshotTable.writerFor(Tables.part(spark, dir)
+      .select("p_partkey", "p_brand", "p_retailprice"))
+      .mode("overwrite").orc(out)
     spark.read.orc(out)
       .groupBy("p_brand")
       .agg(count(lit(1)).as("cnt"),
@@ -185,9 +185,9 @@ object SourceOps {
     */
   def partitionedRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratch("orders_part")
-    Tables.orders(spark, dir)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
+    SnapshotTable.writerFor(Tables.orders(spark, dir)
+      .select("o_orderkey", "o_orderstatus", "o_totalprice"))
+      .mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     partitionedRead(spark, out)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("cnt"),
@@ -204,9 +204,9 @@ object SourceOps {
     */
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratch("priority_text")
-    Tables.orders(spark, dir)
-      .select(col("o_orderpriority").as("value"))
-      .write.mode("overwrite").text(out)
+    SnapshotTable.writerFor(Tables.orders(spark, dir)
+      .select(col("o_orderpriority").as("value")))
+      .mode("overwrite").text(out)
     spark.read.text(out)
       .groupBy("value")
       .agg(count(lit(1)).as("cnt"))
@@ -249,8 +249,8 @@ object SourceOps {
     val reader =
       if (files.isEmpty) spark.read
       else spark.read.schema(SnapshotTable.fileSchema(spark, files))
-    reader.parquet(inDir)
-      .repartition(target).write.mode("overwrite").parquet(outDir)
+    SnapshotTable.writerFor(reader.parquet(inDir)
+      .repartition(target)).mode("overwrite").parquet(outDir)
     target
   }
 
@@ -262,8 +262,8 @@ object SourceOps {
   def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val small = scratch("docs_small")
     val compacted = scratch("docs_compacted")
-    Tables.documents(spark, dir)
-      .repartition(64).write.mode("overwrite").parquet(small)
+    SnapshotTable.writerFor(Tables.documents(spark, dir)
+      .repartition(64)).mode("overwrite").parquet(small)
     compactTo(spark, small, compacted, CompactTargetBytes)
     spark.read.parquet(compacted)
       .groupBy("lang")
@@ -437,8 +437,8 @@ object SourceOps {
       table, 1L)
     // Crashed-writer debris: files in the table's data layout that no
     // manifest ever published.
-    orders.filter(col("o_orderkey") % 4 === 0).repartition(VacuumOrphanFiles)
-      .write.mode("overwrite").parquet(s"$table/data/gen=1/a=orphan")
+    SnapshotTable.writerFor(orders.filter(col("o_orderkey") % 4 === 0)
+      .repartition(VacuumOrphanFiles)).mode("overwrite").parquet(s"$table/data/gen=1/a=orphan")
     SnapshotTable.stage(
       cloneBatch(orders).repartition(SnapAppendFiles), table, "wap")
     val (examined, removed) = SnapshotTable.vacuum(spark, table, minAgeMs = 0L)
@@ -798,8 +798,8 @@ object SourceOps {
     val src = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val gen1Dir = s"$table/data/gen=1"
-    src.sort("o_orderkey").coalesce(1)
-      .write.option("parquet.block.size", (64 * 1024).toString)
+    SnapshotTable.writerFor(src.sort("o_orderkey").coalesce(1))
+      .option("parquet.block.size", (64 * 1024).toString)
       .mode("overwrite").parquet(gen1Dir)
     val file = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir).head
     SnapshotTable.publishAppend(spark, table, 1L, Seq(file), carryFrom = None)
@@ -917,9 +917,9 @@ object SourceOps {
     val src = Tables.orders(spark, dir).select(col("o_orderkey"),
       col("o_orderdate").cast("date").as("dt"))
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", pmod(col("o_orderkey"), lit(4)).cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", pmod(col("o_orderkey"), lit(4)).cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishStats(spark, table, 1L,
       SnapshotTable.footerStats(spark, paths, Seq("o_orderkey", "dt")))
@@ -969,9 +969,9 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + 4) / 4
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishAppend(spark, table, 1L, paths, carryFrom = None)
     val firstCount = SnapshotTable.footerRowCounts(spark, Seq(paths.head))
@@ -1013,9 +1013,9 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + 4) / 4
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishStats(spark, table, 1L,
       SnapshotTable.footerStats(spark, paths, Seq("o_orderkey")))
@@ -1088,9 +1088,10 @@ object SourceOps {
       .as[(Int, Int)].collect()
     val w = (mx - mn + DateSlices) / DateSlices
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"(unix_date(dt) - $mn) div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src
+      .withColumn("s", expr(s"(unix_date(dt) - $mn) div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishStats(spark, table, 1L,
       SnapshotTable.footerStats(spark, paths, Seq("dt")))
@@ -1169,9 +1170,9 @@ object SourceOps {
     */
   def provenance(spark: SparkSession, dir: String): DataFrame = {
     val staged = freshTable(spark, "provenance_docs")
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), (col("doc_id") % 4).as("bucket"))
-      .write.partitionBy("bucket").parquet(staged)
+    SnapshotTable.writerFor(Tables.documents(spark, dir)
+      .select(col("doc_id"), (col("doc_id") % 4).as("bucket")))
+      .partitionBy("bucket").parquet(staged)
     spark.read.parquet(staged)
       .select(regexp_extract(col("_metadata.file_path"), "bucket=(\\d+)", 1)
         .cast("long").as("bucket"), col("doc_id"))
@@ -1347,9 +1348,9 @@ object SourceOps {
     val maxKey = orders.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + DmlSlices) / DmlSlices
     val gen1Dir = s"$t/data/gen=1"
-    orders.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(orders.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val files1 = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishStats(spark, t, 1L,
       SnapshotTable.footerStats(spark, files1, Seq("o_orderkey")))
@@ -1603,10 +1604,10 @@ object SourceOps {
     // One LARGE file (sorts first: "large" < "small_*") + six tiny
     // single-row files, published as one generation.
     val large = s"$t/data/gen=1/large"
-    orders.coalesce(1).write.parquet(large)
+    SnapshotTable.writerFor(orders.coalesce(1)).parquet(large)
     val smalls = ByteCapSmallKeys.map { k =>
       val p = s"$t/data/gen=1/small_${k % 100}"
-      Seq(k).toDF("k").coalesce(1).write.parquet(p)
+      SnapshotTable.writerFor(Seq(k).toDF("k").coalesce(1)).parquet(p)
       graft.sources.SnapshotTable.freshFiles(spark, p).head
     }
     val largeFile = graft.sources.SnapshotTable.freshFiles(spark, large).head
@@ -1850,9 +1851,9 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + 4) / 4
     val gen1Dir = s"$t/data/gen=1"
-    src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishAppend(spark, t, 1L, paths, carryFrom = None)
     def probe(): org.apache.spark.sql.Row = spark.sql(
@@ -2292,10 +2293,10 @@ object SourceOps {
       src.agg(max("o_orderkey"), max("o_custkey")).as[(Long, Long)].collect()
     def epoch(genDir: String, rows: DataFrame, sliceOn: String,
         maxV: Long): Seq[(String, String, Long, Long)] = {
-      rows.withColumn("s",
+      SnapshotTable.writerFor(rows.withColumn("s",
           expr(s"($sliceOn * $EvolveSlices) div ${maxV + 1}").cast("int"))
-        .repartition(col("s"))
-        .write.partitionBy("s").mode("overwrite").parquet(genDir)
+        .repartition(col("s")))
+        .partitionBy("s").mode("overwrite").parquet(genDir)
       SnapshotTable.footerStats(spark,
         graft.sources.SnapshotTable.freshFiles(spark, genDir),
         Seq("o_orderkey", "o_custkey"))
@@ -2768,9 +2769,9 @@ object SourceOps {
     // slice index is a derived column, repartition puts each slice in
     // one task, partitionBy encodes it in the path.
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     // Empty slices (possible for skewed key domains at other sf dirs)
     // drop out of the stats — the manifest lists only files that can
@@ -2830,9 +2831,9 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + SkipSlices) / SkipSlices
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishAppend(spark, table, 1L, paths.sorted, carryFrom = None)
     // Sidecar build + probe through the shared SnapshotTable bloom
@@ -2891,9 +2892,9 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + SkipSlices) / SkipSlices
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishAppend(spark, table, 1L, paths.sorted, carryFrom = None)
     SnapshotTable.writeBloomIndex(spark, table, "cents", paths)
@@ -2937,9 +2938,9 @@ object SourceOps {
     val maxKey = src.agg(max("doc_id")).as[Long].head()
     val w = (maxKey + SkipSlices) / SkipSlices
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", expr(s"doc_id div $w").cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", expr(s"doc_id div $w").cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishAppend(spark, table, 1L, paths.sorted, carryFrom = None)
     SnapshotTable.writeBloomIndex(spark, table, "sid", paths)
@@ -2992,9 +2993,9 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     val w = (maxKey + SkipSlices) / SkipSlices
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("sl", expr(s"o_orderkey div $w").cast("int"))
-      .repartition(col("sl"))
-      .write.partitionBy("sl").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("sl", expr(s"o_orderkey div $w").cast("int"))
+      .repartition(col("sl")))
+      .partitionBy("sl").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(s, gen1Dir)
     SnapshotTable.publishStats(s, table, 1L,
       SnapshotTable.footerStats(s, paths, Seq("o_orderkey")))
@@ -3002,10 +3003,10 @@ object SourceOps {
     // Parquet-backed dim (a folded local relation would not count as a
     // selective build side): the 'x' keys all land in slice 0.
     val dimDir = freshTable(s, "connector_dpp_dim")
-    src.filter(col("o_orderkey") % 31 === 0)
+    SnapshotTable.writerFor(src.filter(col("o_orderkey") % 31 === 0)
       .select(col("o_orderkey"),
-        when(col("o_orderkey") < w, "x").otherwise("y").as("tag"))
-      .write.mode("overwrite").parquet(dimDir)
+        when(col("o_orderkey") < w, "x").otherwise("y").as("tag")))
+      .mode("overwrite").parquet(dimDir)
 
     val joined = s.read
       .format(classOf[graft.streaming.SnapshotSourceProvider].getName)
@@ -3084,9 +3085,10 @@ object SourceOps {
     val w = (maxKey + SkipSlices) / SkipSlices
     def stage(gen: Int, pred: org.apache.spark.sql.Column): Seq[String] = {
       val d = s"$table/data/gen=$gen"
-      src.filter(pred).withColumn("s", expr(s"o_orderkey div $w").cast("int"))
-        .repartition(col("s"))
-        .write.partitionBy("s").mode("overwrite").parquet(d)
+      SnapshotTable.writerFor(src.filter(pred)
+        .withColumn("s", expr(s"o_orderkey div $w").cast("int"))
+        .repartition(col("s")))
+        .partitionBy("s").mode("overwrite").parquet(d)
       graft.sources.SnapshotTable.freshFiles(spark, d)
     }
     val g1 = stage(1, col("o_orderkey") % 3 =!= 0)
@@ -3153,9 +3155,9 @@ object SourceOps {
         (shiftright(zy, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
     }.reduce(_ + _)
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", shiftright(z, ZSliceShift).cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("s", shiftright(z, ZSliceShift).cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     val stats = SnapshotTable.footerStats(spark, paths,
       Seq("o_orderkey", "o_custkey"))
@@ -3209,9 +3211,10 @@ object SourceOps {
     val maxKey = src.agg(max("o_orderkey")).as[Long].head()
     // Gen 1: ingest-order pathology — one file per key residue.
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("s", pmod(col("o_orderkey"), lit(OptScatterFiles.toLong)).cast("int"))
-      .repartition(col("s"))
-      .write.partitionBy("s").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src
+      .withColumn("s", pmod(col("o_orderkey"), lit(OptScatterFiles.toLong)).cast("int"))
+      .repartition(col("s")))
+      .partitionBy("s").mode("overwrite").parquet(gen1Dir)
     val paths1 = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publishStats(spark, table, 1L,
       SnapshotTable.footerStats(spark, paths1, Seq("o_orderkey")))
@@ -3221,11 +3224,11 @@ object SourceOps {
     // publish gen 2 with fresh footer stats. Gen 1 stays resolvable.
     val w = (maxKey + OptSlices) / OptSlices
     val gen2Dir = s"$table/data/gen=2"
-    SnapshotTable.readAs(spark, table, 1L)
+    SnapshotTable.writerFor(SnapshotTable.readAs(spark, table, 1L)
       .withColumn("s", expr(s"o_orderkey div $w").cast("int"))
       .repartition(col("s"))
-      .sortWithinPartitions("o_orderkey")
-      .write.partitionBy("s").mode("overwrite").parquet(gen2Dir)
+      .sortWithinPartitions("o_orderkey"))
+      .partitionBy("s").mode("overwrite").parquet(gen2Dir)
     val paths2 = graft.sources.SnapshotTable.freshFiles(spark, gen2Dir)
     SnapshotTable.publishStats(spark, table, 2L,
       SnapshotTable.footerStats(spark, paths2, Seq("o_orderkey")),
@@ -3284,9 +3287,9 @@ object SourceOps {
     // bucket in the b=<n> path segment the manifest records — the same
     // layout the per-bucket loop produced, minus N−1 sequential jobs.
     val gen1Dir = s"$table/data/gen=1"
-    src.withColumn("b", bucket(col("o_orderkey")))
-      .repartition(col("b"))
-      .write.partitionBy("b").mode("overwrite").parquet(gen1Dir)
+    SnapshotTable.writerFor(src.withColumn("b", bucket(col("o_orderkey")))
+      .repartition(col("b")))
+      .partitionBy("b").mode("overwrite").parquet(gen1Dir)
     val gen1Paths = graft.sources.SnapshotTable.freshFiles(spark, gen1Dir)
     SnapshotTable.publish(spark, table, 1L, gen1Paths)
     val updates = src.filter(pmod(col("o_orderkey"), lit(MergeMod.toLong)) === 1)
@@ -3309,9 +3312,9 @@ object SourceOps {
           .as("o_orderstatus"))
       .unionByName(inserts)
     val outDir = s"$table/data/gen=2"
-    merged.withColumn("b", bucket(col("o_orderkey")))
-      .repartition(col("b"))
-      .write.partitionBy("b").mode("overwrite").parquet(outDir)
+    SnapshotTable.writerFor(merged.withColumn("b", bucket(col("o_orderkey")))
+      .repartition(col("b")))
+      .partitionBy("b").mode("overwrite").parquet(outDir)
     SnapshotTable.publish(spark, table, 2L,
       carry ++ graft.sources.SnapshotTable.freshFiles(spark, outDir),
       action = "merge")
@@ -3340,12 +3343,12 @@ object SourceOps {
     val gen1 = scratch("orders_evolve_gen1")
     val gen2 = scratch("orders_evolve_gen2")
     val o = Tables.orders(spark, dir)
-    o.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .write.mode("overwrite").parquet(gen1)
-    o.filter(col("o_orderkey") % 2 =!= 0)
-      .select(col("o_orderkey"), col("o_orderpriority"))
-      .write.mode("overwrite").parquet(gen2)
+    SnapshotTable.writerFor(o.filter(col("o_orderkey") % 2 === 0)
+      .select(col("o_orderkey"), col("o_totalprice")))
+      .mode("overwrite").parquet(gen1)
+    SnapshotTable.writerFor(o.filter(col("o_orderkey") % 2 =!= 0)
+      .select(col("o_orderkey"), col("o_orderpriority")))
+      .mode("overwrite").parquet(gen2)
     spark.read.option("mergeSchema", "true").parquet(gen1, gen2)
       .agg(count(lit(1)).as("rows"),
         count(col("o_totalprice")).as("with_price"),

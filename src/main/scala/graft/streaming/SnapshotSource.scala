@@ -403,8 +403,9 @@ private[graft] object SnapshotSource {
     * filters on one column conjoin, so their value sets intersect; an
     * empty intersection (`c = 1 AND c IN (2)`) is an unsatisfiable
     * scan the planner may serve with zero files. DATE and TIMESTAMP
-    * literals never probe: the sidecar hashes `k.cast("string")`, a
-    * rendering their physical longs do not share.
+    * literals are not integer probes: the sidecar hashes
+    * `k.cast("string")`, a rendering their physical longs do not share
+    * (DATE probes as its rendered string, [[strProbesOf]]).
     */
   def probesOf(filters: Array[Filter]): Map[String, Seq[Long]] = {
     def valuesOf(f: Filter): Option[(String, Seq[Long])] = f match {
@@ -426,20 +427,37 @@ private[graft] object SnapshotSource {
     * Equality/IN only; several probe filters on one column intersect.
     * Strings never participate in zone-map or row-group range pruning
     * (byte-wise truncated binary stats are not worth the soundness
-    * risk) — bloom membership is the string pruning axis.
+    * risk) — bloom membership is the string pruning axis. A DATE
+    * literal probes as `CAST(d AS STRING)` renders it
+    * ([[probeString]]).
     */
   def strProbesOf(filters: Array[Filter]): Map[String, Seq[String]] = {
     def valuesOf(f: Filter): Option[(String, Seq[String])] = f match {
-      case EqualTo(c, v: String) => Some(c -> Seq(v))
-      case EqualTo(c, v: UTF8String) => Some(c -> Seq(v.toString))
-      case In(c, vs) if vs.nonEmpty && vs.forall(v =>
-          v.isInstanceOf[String] || v.isInstanceOf[UTF8String]) =>
-        Some(c -> vs.toSeq.map(_.toString))
+      case EqualTo(c, v) => probeString(v).map(s => c -> Seq(s))
+      case In(c, vs) if vs.nonEmpty =>
+        val ss = vs.toSeq.map(probeString)
+        if (ss.forall(_.isDefined)) Some(c -> ss.flatten) else None
       case _ => None
     }
     filters.flatMap(valuesOf).groupBy(_._1).map { case (c, gs) =>
       c -> gs.map(_._2.distinct).reduce(_ intersect _)
     }
+  }
+
+  /** A string or DATE literal as the bloom build side's
+    * `k.cast("string")` renders it: a DATE through the proleptic
+    * calendar date of its day number, printed by Spark's own cast
+    * formatter (`java.sql.Date.toString` is hybrid-calendar before
+    * 1582). TIMESTAMP literals stay unprobed: their string form
+    * depends on the session time zone.
+    */
+  private def probeString(v: Any): Option[String] = v match {
+    case s: String => Some(s)
+    case s: UTF8String => Some(s.toString)
+    case _: java.sql.Date | _: java.time.LocalDate =>
+      physicalLong(Some(DateType), v).map(days =>
+        org.apache.spark.sql.catalyst.util.DateFormatter().format(days.toInt))
+    case _ => None
   }
 
   /** Whether a filter yields a zone-map bound or a bloom probe (every
@@ -660,12 +678,12 @@ private[graft] class SnapshotSourceTable(table: String, tableSchema: StructType,
           if (affected.isEmpty) Seq.empty[String]
           else {
             val dataDir = s"$table/data/gen=$gen/a=${SnapshotTable.attemptName()}"
-            shapedToServing(
+            SnapshotTable.writerFor(shapedToServing(
                 spark.read
                   .schema(SnapshotTable.mergedFooterSchema(spark, affected))
                   .parquet(affected: _*))
-              .filter(keep)
-              .write.mode("overwrite").parquet(dataDir)
+              .filter(keep))
+              .mode("overwrite").parquet(dataDir)
             SnapshotTable.freshFiles(spark, dataDir)
           }
         SnapshotTable.publishSubsetRewrite(spark, table, gen,
@@ -2500,10 +2518,13 @@ private[streaming] class PreparedParquetWrite(schema: StructType)
       .prepareWrite(SparkSession.active, job, Map.empty, schema)
 
   private val conf = {
-    job.getConfiguration.set(
-      org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+    val c = job.getConfiguration
+    c.set(org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
       "TIMESTAMP_MICROS")
-    new SerializableConfiguration(job.getConfiguration)
+    // Staged files open through the snapshot layer's fork-free local
+    // filesystem, like every other write it owns.
+    graft.sources.InProcessLocalFileSystem.writeKeys.foreach { case (k, v) => c.set(k, v) }
+    new SerializableConfiguration(c)
   }
 
   /** A writer of one staged file. The file exists from here on, so a

@@ -77,6 +77,13 @@ object StreamDrill {
     // loader, code), so each restart of a query recompiled its whole
     // plan. Drill sessions add no artifacts: nothing needs isolating.
     s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    // Offset and commit logs and HDFS-backed state-store files go
+    // through Hadoop's FileContext, whose local filesystem forks a
+    // `chmod` per file or directory made and a `readlink` per rename
+    // side (~120 processes a trigger without libhadoop). The session's
+    // Hadoop conf routes them to the in-process one instead.
+    val (fcKey, fcImpl) = graft.sources.InProcessLocalFileSystem.fileContextKey
+    s.conf.set(fcKey, fcImpl)
     s
   }
 }

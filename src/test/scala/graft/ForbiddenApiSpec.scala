@@ -17,7 +17,11 @@ import scala.jdk.CollectionConverters._
   *  - a two-argument `FileSystem.listFiles(dir, recursive)` wraps each
   *    entry in a `LocatedFileStatus`, whose constructor copies the
   *    permissions: on a local filesystem without libhadoop that forks
-  *    an `ls -ld` per listed file.
+  *    an `ls -ld` per listed file;
+  *  - in `graft/sources`, a DataFrame parquet write (a `.write` whose
+  *    call chain ends in `.parquet(...)`) that does not go through
+  *    `SnapshotTable.writerFor`: Hadoop's own local filesystem forks a
+  *    `chmod` for every file and directory the write makes.
   *
   * Comments and string literals are blanked before matching, and a
   * method definition of the same name (`def listFiles(...)`, as a
@@ -40,9 +44,14 @@ class ForbiddenApiSpec extends AnyFunSuite {
         |  val d = SnapshotTable.listFiles(spark, t, 1L)
         |  val e = new java.io.File(x).listFiles()
         |  override def listFiles(p: Seq[E], d: Seq[E]) = Nil
+        |  df.write.mode("overwrite")
+        |    .partitionBy("s").parquet(dir)
+        |  SnapshotTable.writerFor(df).mode("overwrite").parquet(dir)
+        |  df.write.format(provider).save(); out.write(bytes); df.writeStream
         |}
         |""".stripMargin
     assert(violations(src).map(_._1) === Seq(6, 8, 9))
+    assert(violations(src, inSources = true).map(_._1) === Seq(6, 8, 9, 13))
   }
 
   test("main sources make none of the forbidden calls") {
@@ -51,8 +60,10 @@ class ForbiddenApiSpec extends AnyFunSuite {
     val files = Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     assert(files.nonEmpty)
+    val sources = root.resolve("graft/sources")
+    assert(Files.isDirectory(sources), s"no ${sources.toAbsolutePath}")
     val found = files.flatMap { f =>
-      violations(new String(Files.readAllBytes(f), "UTF-8"))
+      violations(new String(Files.readAllBytes(f), "UTF-8"), f.startsWith(sources))
         .map { case (line, what) => s"$f:$line: $what" }
     }
     assert(found.isEmpty, found.mkString("forbidden calls:\n", "\n", ""))
@@ -61,8 +72,10 @@ class ForbiddenApiSpec extends AnyFunSuite {
 
 object ForbiddenApiSpec {
 
-  /** `(line, rule)` of every forbidden call in Scala source `src`. */
-  def violations(src: String): Seq[(Int, String)] = {
+  /** `(line, rule)` of every forbidden call in Scala source `src`;
+    * `inSources` adds the rule for files of `graft/sources`.
+    */
+  def violations(src: String, inSources: Boolean = false): Seq[(Int, String)] = {
     val code = blankCommentsAndStrings(src)
     def lineOf(i: Int): Int = code.substring(0, i).count(_ == '\n') + 1
     def calls(name: String): Seq[(Int, Int)] =
@@ -74,7 +87,37 @@ object ForbiddenApiSpec {
       lineOf(i) -> "ParquetReader.builder (default Configuration)"
     } ++ calls("listFiles").collect {
       case (i, 2) => lineOf(i) -> "FileSystem.listFiles (LocatedFileStatus: a process per file)"
-    }).sortBy(_._1)
+    } ++ (if (!inSources) Nil else "\\.write\\b(?!\\s*\\()".r.findAllMatchIn(code)
+      .filter(m => chainCalls(code, m.end).contains("parquet")).map { m =>
+        lineOf(m.start) -> "parquet write not through SnapshotTable.writerFor (a chmod per file)"
+      })).sortBy(_._1)
+  }
+
+  /** Names of the `.name` / `.name(...)` selections chained right after
+    * `from`, across whitespace and line breaks.
+    */
+  private def chainCalls(code: String, from: Int): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var i = from
+    def skipBlank(): Unit = while (i < code.length && code(i).isWhitespace) i += 1
+    skipBlank()
+    while (i < code.length && code(i) == '.') {
+      i += 1
+      val start = i
+      while (i < code.length && code(i).isLetterOrDigit) i += 1
+      out += code.substring(start, i)
+      skipBlank()
+      if (i < code.length && code(i) == '(') {
+        var depth = 0
+        while (i < code.length && { code(i) match {
+            case '(' => depth += 1
+            case ')' => depth -= 1
+            case _ =>
+          }; i += 1; depth > 0 }) ()
+        skipBlank()
+      }
+    }
+    out.result()
   }
 
   /** Top-level arguments of the call whose `(` ends just before `from`. */

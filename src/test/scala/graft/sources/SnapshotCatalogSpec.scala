@@ -223,6 +223,20 @@ class SnapshotCatalogSpec extends AnyFunSuite {
       s"WHERE d = ${dayOf(42)}").head().getLong(0) === 0L)
   }
 
+  test("SQL DELETE on a DATE point consults the bloom sidecar and carries the other file") {
+    val t = dateBloomTable("t_date_bloom_prune")
+    val Seq(fa, fb) = SnapshotTable.listFiles(spark, t, 1L).sorted
+    // DATE '2024-02-12' is k = 42, an even key: file a holds it.
+    assert(dayOf(42) === "DATE '2024-02-12'")
+    spark.sql("DELETE FROM spec_cat.t_date_bloom_prune WHERE d = DATE '2024-02-12'")
+    val files2 = SnapshotTable.listFiles(spark, t, 2L).toSet
+    assert(files2.contains(fb), "the probe-negative file must carry by path")
+    assert(!files2.contains(fa), "the probe-positive file must be rewritten")
+    val r = spark.sql(
+      "SELECT count(*), sum(k) FROM spec_cat.t_date_bloom_prune").head()
+    assert(r.getLong(0) === 199L && r.getLong(1) === (0L until 200L).sum - 42L)
+  }
+
   test("MATCHED-only MERGE on a bloom-indexed DATE key updates its row") {
     dateBloomTable("t_date_bloom_merge")
     spark.sql(s"SELECT ${dayOf(42)} AS d, 777L AS nv")
